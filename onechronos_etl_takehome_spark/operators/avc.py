@@ -603,35 +603,6 @@ def _escape_emulation(rbsp: bytes) -> bytes:
     return bytes(out)
 
 
-def parse_pps(pps: bytes) -> dict:
-    """Parse one PPS NAL (header byte included) — the fields an
-    I-slice header parse depends on (14496-10 §7.3.2.2, up to the
-    more_rbsp_data tail, which I_PCM never needs)."""
-    if not pps or pps[0] & 0x1F != 8:
-        raise ValueError("not a PPS NAL")
-    r = _BitReader(_strip_emulation(pps[1:]))
-    d = {
-        "pps_id": r.ue(),
-        "sps_id": r.ue(),
-        "entropy_coding_mode": r.u(1),
-        "bottom_field_poc_present": r.u(1),
-        "num_slice_groups": r.ue() + 1,
-    }
-    if d["num_slice_groups"] > 1:
-        raise ValueError("FMO slice groups unsupported")
-    d["num_ref_idx_l0"] = r.ue() + 1
-    d["num_ref_idx_l1"] = r.ue() + 1
-    d["weighted_pred"] = r.u(1)
-    d["weighted_bipred_idc"] = r.u(2)
-    d["pic_init_qp"] = 26 + r.se()
-    d["pic_init_qs"] = 26 + r.se()
-    d["chroma_qp_index_offset"] = r.se()
-    d["deblocking_filter_control_present"] = r.u(1)
-    d["constrained_intra_pred"] = r.u(1)
-    d["redundant_pic_cnt_present"] = r.u(1)
-    return d
-
-
 def encode_ipcm_idr(
     y, cb, cr, *, idr_pic_id: int = 0, sps: dict | None = None
 ) -> bytes:

@@ -195,18 +195,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return rng.standard_normal((n_planes, dim)).tolist()
 
 
-def signed_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane LSH bucket id (one bit per plane)."""
-    bits = [
-        F.when(_dot(vec, F.array(*[F.lit(float(v)) for v in plane])) >= 0, 1 << i).otherwise(0)
-        for i, plane in enumerate(planes)
-    ]
-    out = F.lit(0)
-    for b in bits:
-        out = out + b
-    return out.cast("long")
-
-
 def train_ivf_centroids(
     corpus: DataFrame,
     *,

@@ -112,10 +112,6 @@ def lang_id(text: Column) -> Column:
     return out
 
 
-def content_fingerprint(text: Column) -> Column:
-    return F.md5(text)
-
-
 # PII patterns: RE2-safe subset (no lookarounds/backrefs) so the same
 # pattern strings run identically under Spark's Java regex and DuckDB's
 # RE2 — the cross-engine contract the redaction oracle depends on.

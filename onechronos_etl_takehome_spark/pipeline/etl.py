@@ -3,11 +3,18 @@
 Same query semantics as the reference (etl_pipeline.py:62-442; quirks
 Q1-Q7 per SURVEY.md §2.9), different execution design:
 
-- **3 actions instead of 14.** The reference fires 12 counts + 2
+- **2 actions instead of 14.** The reference fires 12 counts + 2
   collects with no caching, re-running the CSV scans and joins ~10×
-  (SURVEY.md §4.3). Here every stage count is an ``Observation``
-  attached to the single lineage; the validated frame is cached once;
-  one stats aggregation + two writes complete the run.
+  (SURVEY.md §4.3). Here every count is an ``Observation``: the stage
+  counts on the single lineage, the valid/invalid/discrepancy split on
+  the two sink projections. The validated frame is cached once and
+  the two writes, run side by side, are the whole run.
+- **A cache sized by the data.** The cache holds the dedup shuffle's
+  output, and every sink task reads one of its partitions. The session
+  lets AQE coalesce that shuffle inside the cache
+  (``canChangeCachedPlanOutputPartitioning``, session.py); otherwise a
+  small batch is cached as ``shuffle.partitions`` mostly-empty
+  partitions and each sink pays a task and a part file for every one.
 - **Deterministic dedup.** ``dropDuplicates`` keeps an arbitrary row
   per key; we keep the row that sorts first over all columns, so
   reruns and repartitioning cannot change survivors.
@@ -26,7 +33,7 @@ when ``filter_duplicates`` / ``filter_cancelled_trades`` are false
 (identify and remove are separate steps, etl_pipeline.py:110-137).
 This pipeline reports 0 for a disabled filter: computing the duplicate
 marking costs a full shuffle, and paying it for a metric whose filter
-is switched off is exactly the kind of hidden cost the 3-action design
+is switched off is exactly the kind of hidden cost the 2-action design
 removes. Default config (all filters on) matches the reference's
 metrics exactly (tests/test_reference_parity.py); the divergence is
 asserted intentionally in tests/test_pipeline_config.py.
@@ -40,9 +47,10 @@ them byte-for-byte (tests/test_reference_parity.py does).
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import deterministic_dedup
@@ -199,10 +207,10 @@ class ReconciliationPipeline:
 
     # -- extract ----------------------------------------------------------
 
-    def _observe_count(self, df: DataFrame, name: str) -> DataFrame:
+    def _observe_count(self, df: DataFrame, name: str, *extra: Column) -> DataFrame:
         obs = Observation(name)
         self._observations[name] = obs
-        return df.observe(obs, F.count(F.lit(1)).alias("n"))
+        return df.observe(obs, F.count(F.lit(1)).alias("n"), *extra)
 
     def extract(self) -> tuple[DataFrame, DataFrame, DataFrame]:
         p = lambda f: os.path.join(self.input_dir, f)  # noqa: E731
@@ -349,40 +357,42 @@ class ReconciliationPipeline:
         trades, fills, symbols = self.extract()
         validated = self.transform(trades, fills, symbols).cache()
         try:
-            # Action 1: one aggregation materializes the cache, fires
-            # every stage Observation, and computes the split metrics.
-            stats = validated.agg(
-                F.sum(F.when(F.col("is_valid"), 1).otherwise(0)).alias("valid"),
-                F.sum(F.when(~F.col("is_valid"), 1).otherwise(0)).alias("invalid"),
-                F.sum(
-                    F.when(F.col("is_valid") & F.col("discrepancy_flag"), 1).otherwise(
-                        0
-                    )
-                ).alias("discrepancy"),
-            ).collect()[0]
-            obs = {k: o.get["n"] for k, o in self._observations.items()}
-            self.metrics = {
-                "processed_trades": obs["raw"],
-                "duplicate_trades": obs["raw"] - obs["post_dedup"],
-                "cancelled_trades": obs["post_dedup"] - obs["post_cancel"],
-                "successful_trades": int(stats["valid"] or 0),
-                "invalid_trades": int(stats["invalid"] or 0),
-                "discrepancy_trades": int(stats["discrepancy"] or 0),
-            }
-
-            # Actions 2+3: the two sinks, each reading the cache.
+            # Actions 1+2: the two sinks, side by side. The first to
+            # reach the cache materializes it and fires the stage
+            # Observations inside it; the split metrics are
+            # Observations on the sink projections themselves.
+            valid = self._observe_count(
+                self.cleaned_output(validated),
+                "valid",
+                F.sum(F.when(F.col("discrepancy_flag"), 1).otherwise(0)).alias("d"),
+            )
+            invalid = self._observe_count(self.exceptions_output(validated), "invalid")
             out = self.config["output"]
             single = bool(out.get("single_file", True))
-            write_json(
-                self.cleaned_output(validated),
-                os.path.join(output_dir, out["cleaned_trades_path"]),
-                single_file=single,
-            )
-            write_json(
-                self.exceptions_output(validated),
-                os.path.join(output_dir, out["exceptions_report_path"]),
-                single_file=single,
-            )
+
+            def sink(df: DataFrame, key: str) -> None:
+                write_json(df, os.path.join(output_dir, out[key]), single_file=single)
+
+            # Both writes finish before the first error is re-raised
+            # and before the cache is dropped.
+            with ThreadPoolExecutor(2) as pool:
+                writes = [
+                    pool.submit(sink, valid, "cleaned_trades_path"),
+                    pool.submit(sink, invalid, "exceptions_report_path"),
+                ]
+            for w in writes:
+                w.result()
+            obs = {k: o.get for k, o in self._observations.items()}
+            n = {k: v["n"] for k, v in obs.items()}
+            self.metrics = {
+                "processed_trades": n["raw"],
+                "duplicate_trades": n["raw"] - n["post_dedup"],
+                "cancelled_trades": n["post_dedup"] - n["post_cancel"],
+                "successful_trades": n["valid"],
+                "invalid_trades": n["invalid"],
+                # sum() over an empty sink is NULL
+                "discrepancy_trades": obs["valid"]["d"] or 0,
+            }
             return self.metrics
         finally:
             validated.unpersist()

@@ -14,6 +14,16 @@ additionally pin the two semantics its golden outputs depend on
 Scale posture: shuffle partition count is configurable (defaults sized
 for local[32]); on a real cluster you would raise it to ~2-3× total
 cores and rely on AQE coalescing, which is enabled here.
+
+``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true`` —
+Spark 4.1 ships it false, so AQE may not coalesce the shuffle inside a
+``.cache()``d plan: the cached frame keeps all ``shuffle.partitions``
+partitions, mostly empty, and every consumer of it runs that many
+tasks. The reconciliation pipeline caches its dedup output, so at 24k
+trades and 32 partitions each pass ran 132 tasks and wrote 64 part
+files; with the cache sized from the measured shuffle bytes it runs 7
+tasks and writes 2 files (4 cores). At 1M trades on the same 4 cores
+it is cached as 5 partitions, so large inputs keep their parallelism.
 """
 
 from __future__ import annotations
@@ -51,6 +61,9 @@ def get_spark(
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        # lets AQE coalesce the shuffle inside a cached plan (see the
+        # module docstring)
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),

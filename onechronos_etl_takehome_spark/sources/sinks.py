@@ -13,6 +13,7 @@ import json
 from typing import Any
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 
 def write_parquet(
@@ -89,8 +90,13 @@ def write_json(
     if not single_file:
         df.write.mode(mode).json(path)
         return
-    # Reference-parity path: toJSON drops NULL fields (quirk Q3,
-    # etl_pipeline.py:376-380), producing missing-key ≡ NULL semantics.
-    records: list[dict[str, Any]] = [json.loads(r) for r in df.toJSON().collect()]
+    # Reference-parity path: like the reference's toJSON, to_json drops
+    # NULL fields (quirk Q3, etl_pipeline.py:376-380), producing
+    # missing-key ≡ NULL semantics. A DataFrame collect rather than
+    # toJSON's RDD, so Observations on ``df`` fire after the rows are
+    # read, as they do for the partitioned write.
+    records: list[dict[str, Any]] = [
+        json.loads(r[0]) for r in df.select(F.to_json(F.struct("*"))).collect()
+    ]
     with open(path, "w") as f:
         json.dump(records, f, indent=indent)
