@@ -230,21 +230,17 @@ def validate_arrow(tbl, constraints: dict[str, str]) -> None:
 
 
 def add_constraint(
-    spark: SparkSession,
-    path: str,
-    name: str,
-    expr: str,
-    *,
-    max_retries: int = 5,
+    spark: SparkSession, path: str, name: str, expr: str
 ) -> int:
     """Record CHECK ``expr`` under ``name`` after validating every
     live row already satisfies it (Delta's ADD CONSTRAINT contract —
     a recorded constraint is a real invariant, not an aspiration).
     Raises ConstraintViolation listing the violating row count if the
-    existing table breaks it, ValueError if the name is taken."""
+    existing table breaks it, ValueError if the name is taken. A lost
+    commit race re-validates against the new base."""
     txlog._require_writer(path)
-    for _ in range(max_retries):
-        base = txlog.committed_versions(path)[-1]
+
+    def plan(base: int):
         current = table_constraints(path, version=base)
         if name in current:
             raise ValueError(
@@ -261,50 +257,27 @@ def add_constraint(
         # a table carrying CHECK constraints needs constraint-aware
         # writers: bump min_writer_version to 2 so a feature-unaware
         # writer refuses instead of silently bypassing validation
-        proto = txlog.table_protocol(path, version=base)
-        proto = {
-            "min_reader_version": int(proto.get("min_reader_version", 1)),
-            "min_writer_version": max(
-                2, int(proto.get("min_writer_version", 1))
-            ),
-        }
-        extra = {
+        return [], {
             "constraints": {**current, name: expr},
-            "protocol": proto,
+            "protocol": txlog._protocol_at_least(path, base, 1, 2),
             "metrics": {"op": "add-constraint", "constraint": name},
         }
-        try:
-            txlog._commit(path, base + 1, [], extra=extra)
-            txlog._maybe_checkpoint(path, base + 1)
-            return base + 1
-        except txlog.CommitConflict:
-            continue  # someone committed; re-validate against new base
-    raise txlog.CommitConflict(
-        f"lost {max_retries} add-constraint races on {path}"
-    )
+
+    return txlog._transact(path, "add-constraint", plan)
 
 
-def drop_constraint(
-    spark: SparkSession, path: str, name: str, *, max_retries: int = 5
-) -> int:
+def drop_constraint(spark: SparkSession, path: str, name: str) -> int:
     """Remove ``name`` from the active set (no validation needed)."""
     txlog._require_writer(path)
-    for _ in range(max_retries):
-        base = txlog.committed_versions(path)[-1]
+
+    def plan(base: int):
         current = table_constraints(path, version=base)
         if name not in current:
             raise ValueError(f"no constraint {name!r} on {path}")
         remaining = {k: v for k, v in current.items() if k != name}
-        extra = {
+        return [], {
             "constraints": remaining,
             "metrics": {"op": "drop-constraint", "constraint": name},
         }
-        try:
-            txlog._commit(path, base + 1, [], extra=extra)
-            txlog._maybe_checkpoint(path, base + 1)
-            return base + 1
-        except txlog.CommitConflict:
-            continue
-    raise txlog.CommitConflict(
-        f"lost {max_retries} drop-constraint races on {path}"
-    )
+
+    return txlog._transact(path, "drop-constraint", plan)

@@ -19,16 +19,19 @@ rows must rewrite 0.1% of files, not the table:
   then ``os.link`` it to ``<version>.json`` — link fails with EEXIST
   if another writer committed that version first (POSIX exclusive
   create; on an object store this is the conditional PUT every table
-  format builds on). The loser re-reads the log, re-validates its
-  transaction against the new snapshot, and retries at version+1 —
-  textbook optimistic concurrency, exercised by a real two-writer
-  race in tests/test_txlog.py.
-- **Copy-on-write delete**: scan ONLY file provenance
-  (``input_file_name`` over the live set) to find files containing
-  matching rows; rewrite those files without the matching rows;
-  commit remove(old)+add(new) atomically. Untouched files (the vast
-  majority under selective predicates — partition-style pruning
-  composes upstream) are carried by reference.
+  format builds on). ``_transact`` is the ONE re-validate-and-retry
+  loop every write after version 0 goes through (DML, DDL, restore,
+  compaction, constraints, the stream and format writers): it plans
+  against the newest version, publishes it as the next one, and on a
+  lost race re-plans against the new snapshot — textbook optimistic
+  concurrency, exercised by real two-writer races in the tests.
+- **Copy-on-write delete / update** (``_cow_commit``): scan ONLY
+  file provenance over the live set to find files containing
+  matching rows; rewrite those files without (or with updated)
+  matching rows; commit remove(old)+add(new) atomically. Untouched
+  files (the vast majority under selective predicates —
+  partition-style pruning composes upstream) are carried by
+  reference.
 - **File-pruned MERGE** (``merge_upsert``): the same provenance
   pruning keyed on the update batch's distinct keys — matched files
   rewrite without their matched rows, the update rows land as fresh
@@ -118,8 +121,9 @@ class CommitCoordinator:
     item 5): publish a fully-written private manifest as
     ``<version>.json`` atomically-if-absent. Everything else in the
     protocol — staging immutable data files, building the manifest,
-    the re-validate-and-retry loop — is storage-agnostic; only this
-    create-if-absent step depends on what the storage can promise.
+    the re-validate-and-retry loop (``_transact``) — is
+    storage-agnostic; only this create-if-absent step depends on what
+    the storage can promise.
 
     Contract ``publish(tmp, target)``:
     - on success, ``target`` exists with exactly ``tmp``'s bytes and
@@ -622,12 +626,54 @@ def _commit(
         os.unlink(tmp)
 
 
-def _commit_with_batch(
-    path: str, version: int, actions: list[dict], batch_id: int
-) -> None:
-    """Commit carrying a streaming batch_id (see streaming/
-    txlog_stream.py — the idempotence key for exactly-once appends)."""
-    _commit(path, version, actions, extra={"batch_id": batch_id})
+_COMMIT_ATTEMPTS = 5
+
+
+def _transact(path: str, op: str, plan, *, create: bool = False):
+    """The commit protocol, written once for every write to the log.
+
+    Each attempt reads the newest version ``base`` (-1 before the
+    first commit) and calls ``plan(base)``, which re-validates and
+    re-plans against that snapshot. ``plan`` returns either
+    ``(actions, extra)`` — committed as ``base + 1``, then
+    checkpointed, and that version is returned — or any other value,
+    returned unchanged without committing (nothing to do, a no-op
+    restore, a replayed stream batch). A lost race (``CommitConflict``)
+    re-plans at the new head; after ``_COMMIT_ATTEMPTS`` lost races it
+    raises. An empty log is not a table (ValueError) unless ``create``
+    — the stream/format writers, whose first batch creates it."""
+    for _ in range(_COMMIT_ATTEMPTS):
+        versions = committed_versions(path)
+        if not versions and not create:
+            raise ValueError(f"not a txlog table (no commits): {path}")
+        base = versions[-1] if versions else -1
+        planned = plan(base)
+        if not isinstance(planned, tuple):
+            return planned
+        actions, extra = planned
+        try:
+            # module-global lookup at call time: tests patch _commit
+            _commit(path, base + 1, actions, extra=extra)
+        except CommitConflict:
+            continue  # re-resolve the snapshot and re-plan
+        _maybe_checkpoint(path, base + 1)
+        return base + 1
+    raise CommitConflict(f"lost {_COMMIT_ATTEMPTS} {op} races on {path}")
+
+
+def _protocol_at_least(path: str, base: int, reader: int, writer: int) -> dict:
+    """The table's protocol at ``base`` raised to at least reader
+    ``reader`` / writer ``writer`` — the bump every feature-introducing
+    commit stamps."""
+    proto = table_protocol(path, version=base)
+    return {
+        "min_reader_version": max(
+            reader, int(proto.get("min_reader_version", 1))
+        ),
+        "min_writer_version": max(
+            writer, int(proto.get("min_writer_version", 1))
+        ),
+    }
 
 
 CHECKPOINT_INTERVAL = 10
@@ -1391,18 +1437,16 @@ def append(
     *,
     cluster_by: str | None = None,
     cluster_files: int | None = None,
-    max_retries: int = 5,
 ) -> int:
-    """Append-only commit: stages data once, then retries the (cheap)
-    manifest link under contention — appends never conflict
-    semantically; the retry re-validates CHECK constraints only when
-    a concurrent add_constraint changed the active set."""
-    _resolve_version(path, None)  # clear error on a non-table path
+    """Append-only commit: stages data once, then ``_transact``
+    retries the (cheap) manifest link under contention — appends never
+    conflict semantically; the retry re-validates CHECK constraints
+    only when a concurrent add_constraint changed the active set."""
     _require_writer(path)
-    # type enforcement BEFORE staging: a conflicting append should
-    # not even write bytes (the commit-time check below is the
-    # backstop for every other path)
-    _union_schema_extra(path, committed_versions(path)[-1], df)
+    # clear error on a non-table path; type enforcement BEFORE
+    # staging: a conflicting append should not even write bytes (the
+    # commit-time check below is the backstop for every other path)
+    _union_schema_extra(path, _resolve_version(path, None)[0], df)
     pb = table_partitioning(path)
     if pb and any(c not in df.columns for c in pb):
         raise ValueError(
@@ -1428,25 +1472,22 @@ def append(
         "files_added": len(adds),
         "rows_written": sum(a["rows"] for a in adds),
     }
-    for _ in range(max_retries):
-        version = committed_versions(path)[-1] + 1
+
+    def plan(base: int):
+        nonlocal validated_against
         # a concurrent add_constraint may have won the version race
-        # since the pre-loop validation; re-validate against the set
+        # since the first validation; re-validate against the set
         # active at the NEW base so the committed data is never
         # stale-validated (round-10 advice). No-op when unchanged.
-        current = table_constraints(path, version=version - 1)
+        current = table_constraints(path, version=base)
         if current != validated_against:
             validate_staged(df.sparkSession, path, staged, current)
             validated_against = current
-        extra = _union_schema_extra(path, version - 1, df)
+        extra = _union_schema_extra(path, base, df)
         extra["metrics"] = metrics
-        try:
-            _commit(path, version, adds, extra=extra)
-            _maybe_checkpoint(path, version)
-            return version
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"lost {max_retries} append races on {path}")
+        return adds, extra
+
+    return _transact(path, "append", plan)
 
 
 def _constraint_referencing(path: str, base: int, col: str) -> str | None:
@@ -1470,22 +1511,11 @@ def _constraint_referencing(path: str, base: int, col: str) -> str | None:
     return None
 
 
-def _mapping_protocol(path: str, base: int) -> dict:
-    """Protocol after a column-mapping DDL: reader 2 / writer 3."""
-    proto = table_protocol(path, version=base)
-    return {
-        "min_reader_version": max(2, int(proto.get("min_reader_version", 1))),
-        "min_writer_version": max(3, int(proto.get("min_writer_version", 1))),
-    }
-
-
 def rename_column(
     spark: SparkSession,
     path: str,
     old: str,
     new: str,
-    *,
-    max_retries: int = 5,
 ) -> int:
     """ALTER TABLE RENAME COLUMN as a METADATA-ONLY commit (Delta's
     column mapping): the manifest schema renames the field and the
@@ -1498,8 +1528,8 @@ def rename_column(
     from .constraints import table_constraints
 
     _require_writer(path)
-    for _ in range(max_retries):
-        base = committed_versions(path)[-1]
+
+    def plan(base: int):
         schema = _latest_schema(path, base)
         if schema is None:
             raise ValueError(
@@ -1541,21 +1571,15 @@ def rename_column(
             "schema": new_schema.json(),
             "column_mapping": {"map": mapping, "dropped": state["dropped"]},
             "constraints": table_constraints(path, version=base),
-            "protocol": _mapping_protocol(path, base),
+            "protocol": _protocol_at_least(path, base, 2, 3),
             "metrics": {"op": "rename-column", "from": old, "to": new},
         }
-        try:
-            _commit(path, base + 1, [], extra=extra)
-            _maybe_checkpoint(path, base + 1)
-            return base + 1
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"lost {max_retries} rename races on {path}")
+        return [], extra
+
+    return _transact(path, "rename", plan)
 
 
-def drop_column(
-    spark: SparkSession, path: str, name: str, *, max_retries: int = 5
-) -> int:
+def drop_column(spark: SparkSession, path: str, name: str) -> int:
     """ALTER TABLE DROP COLUMN as a METADATA-ONLY commit: the field
     leaves the manifest schema, its PHYSICAL name is tombstoned (so a
     later add of the same name cannot resurrect old bytes — see
@@ -1567,8 +1591,8 @@ def drop_column(
     from .constraints import table_constraints
 
     _require_writer(path)
-    for _ in range(max_retries):
-        base = committed_versions(path)[-1]
+
+    def plan(base: int):
         schema = _latest_schema(path, base)
         if schema is None or name not in schema.fieldNames():
             raise ValueError(f"no column {name!r} on {path}")
@@ -1602,16 +1626,12 @@ def drop_column(
                 "dropped": sorted({*state["dropped"], physical}),
             },
             "constraints": table_constraints(path, version=base),
-            "protocol": _mapping_protocol(path, base),
+            "protocol": _protocol_at_least(path, base, 2, 3),
             "metrics": {"op": "drop-column", "column": name},
         }
-        try:
-            _commit(path, base + 1, [], extra=extra)
-            _maybe_checkpoint(path, base + 1)
-            return base + 1
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"lost {max_retries} drop races on {path}")
+        return [], extra
+
+    return _transact(path, "drop", plan)
 
 
 def _may_match(info: dict, col: str, bound) -> bool:
@@ -1823,15 +1843,15 @@ def delete_where(
     condition,
     *,
     mode: str = "cow",
-    max_retries: int = 3,
 ) -> int:
     """DELETE at file granularity, two write strategies:
 
     ``mode="cow"`` (default) — copy-on-write: rewrite ONLY the live
     files that contain matching rows; untouched files carry by
-    reference. One provenance scan (input_file_name over the
-    snapshot) finds the touched set; the rewrite reads just those
-    files. Write amplification = the full size of every touched file.
+    reference. One provenance scan over the snapshot finds the
+    touched set; the rewrite reads just those files (``_cow_commit``,
+    shared with UPDATE). Write amplification = the full size of every
+    touched file.
 
     ``mode="dv"`` — merge-on-read DELETION VECTORS (round-10 verdict
     item 4, Delta/Iceberg's v2 answer to CoW amplification): instead
@@ -1852,63 +1872,120 @@ def delete_where(
     modes (hash-pinned in the gate)."""
     if mode not in ("cow", "dv"):
         raise ValueError(f"mode must be 'cow' or 'dv', got {mode!r}")
-    if mode == "dv":
-        return _dv_commit(spark, path, condition, max_retries=max_retries)
-    _require_writer(path)
-    pb = table_partitioning(path) if committed_versions(path) else []
-    for _ in range(max_retries):
-        base = committed_versions(path)[-1]
-        snapshot = live_files(path, version=base)
-        # basenames are uuid-unique, so the manifest-relative path
-        # (which may carry partition directories) resolves from them
-        rel_by_base = {os.path.basename(f): f for f in snapshot}
-        # the provenance view merges schemas, restores partitions, and
-        # masks deletion vectors — matched rows are LIVE rows only
-        touched = [
-            rel_by_base[r["_txb"]]
-            for r in _provenance_view(spark, path, snapshot, base)
-            .filter(condition)
-            .select("_txb")
-            .distinct()
-            .collect()  # bounded: one row per TOUCHED FILE (metadata-plane)
-        ]
-        actions: list[dict] = [{"remove": f} for f in touched]
-        staged: list[tuple[str, int, dict, dict]] = []
-        cdf_files: list[dict] = []
-        if touched:
-            # SQL DELETE removes rows whose predicate IS TRUE; a row
-            # where it evaluates NULL must SURVIVE the rewrite. Plain
-            # `~condition` is NULL for those rows and the filter would
-            # silently drop them (3VL bug caught in round 7: a
-            # NULL-tag row sharing a file with a matched row vanished)
-            # ONE scan of the touched files feeds both the keep-
-            # rewrite and the CDF preimage below (guide §1.2: the two
-            # frames are complements of the same read; without the
-            # checkpoint each write job re-scans the touched set)
-            from ..operators.util import truncate_lineage
+    commit = _dv_commit if mode == "dv" else _cow_commit
+    return commit(spark, path, condition)
 
+
+def _touched_files(matched: DataFrame, snapshot) -> list[str]:
+    """Manifest names of the ``snapshot`` files holding a row of
+    ``matched`` (a filtered or joined provenance view). Basenames are
+    uuid-unique, so the manifest-relative path (which may carry
+    partition directories) resolves from ``_txb`` driver-side."""
+    rel_by_base = {os.path.basename(f): f for f in snapshot}
+    return [
+        rel_by_base[r["_txb"]]
+        for r in matched.select("_txb")
+        .distinct()
+        .collect()  # bounded: one row per TOUCHED FILE (metadata-plane)
+    ]
+
+
+def _assigned(rows: DataFrame, assignments: dict) -> DataFrame:
+    """``rows`` with the UPDATE ``assignments`` applied — one select,
+    so every RHS sees the preimage row (SQL's simultaneous SET)."""
+    return rows.select(
+        *[
+            (assignments[c] if c in assignments else F.col(c)).alias(c)
+            for c in rows.columns
+        ]
+    )
+
+
+def _cow_commit(
+    spark: SparkSession,
+    path: str,
+    condition,
+    *,
+    assignments: dict | None = None,
+) -> int:
+    """The copy-on-write commit shared by ``delete_where(mode="cow")``
+    (``assignments=None``) and ``update_where(mode="cow")`` — the twin
+    of ``_dv_commit``. Per attempt: one provenance scan over the
+    snapshot finds the files holding a matched row (matched rows are
+    LIVE rows only: the view masks deletion vectors); ONE checkpointed
+    scan of those files then feeds both their rewrite and the change-
+    data preimage (guide §1.2: without the checkpoint each write job
+    re-scans the touched set). A DELETE keeps the rows where the
+    predicate is not TRUE; an UPDATE applies the assignments where it
+    is TRUE and validates the rewrite against CHECK constraints.
+    Untouched files carry by reference."""
+    from ..operators.util import truncate_lineage
+
+    _require_writer(path)
+    op = "delete" if assignments is None else "update"
+
+    def plan(base: int):
+        snapshot = live_files(path, version=base)
+        touched = _touched_files(
+            _provenance_view(spark, path, snapshot, base).filter(condition),
+            snapshot,
+        )
+        actions: list[dict] = [{"remove": f} for f in touched]
+        staged: list[tuple] = []
+        cdf_files: list[dict] | None = []
+        if touched:
+            pb = table_partitioning(path, version=base)
             src = truncate_lineage(
                 _mapped_read(spark, path, touched, version=base)
             )
-            keep = src.filter(~F.coalesce(condition, F.lit(False)))
-            staged = _stage_data(keep, path, partition_by=pb or None)
+            preimage = src.filter(condition)
+            if assignments is None:
+                # SQL DELETE removes rows whose predicate IS TRUE; a
+                # row where it evaluates NULL must SURVIVE the rewrite.
+                # Plain `~condition` is NULL for those rows and the
+                # filter would silently drop them (3VL bug caught in
+                # round 7: a NULL-tag row sharing a file with a matched
+                # row vanished)
+                out = src.filter(~F.coalesce(condition, F.lit(False)))
+            else:
+                # when() fires only where condition IS TRUE: NULL rows
+                # keep their preimage (3VL) — and one select evaluates
+                # every RHS against the preimage row (simultaneous)
+                out = src.select(
+                    *[
+                        F.when(condition, assignments[c])
+                        .otherwise(F.col(c))
+                        .alias(c)
+                        if c in assignments
+                        else F.col(c)
+                        for c in src.columns
+                    ]
+                )
+            staged = _stage_data(out, path, partition_by=pb or None)
             actions += _add_actions(staged)
-            fold = _fold_live(path, base)
-            any_dv = any("dv" in fold.get(f, {}) for f in touched)
-            if staged or any_dv:
+            if assignments is not None:
+                from .constraints import table_constraints, validate_staged
+
+                validate_staged(
+                    spark, path, [f for f, *_ in staged],
+                    table_constraints(path, version=base),
+                )
+                cdf_files = _stage_change_data(
+                    preimage, _assigned(preimage, assignments), path
+                )
+            elif staged or any(
+                "dv" in _fold_live(path, base).get(f, {}) for f in touched
+            ):
                 # commit-time CDF change files (round-10 verdict item
                 # 3): the deleted rows are exactly the touched rows
-                # where the predicate IS TRUE — keep's exact
-                # complement, already identified by this DML. Writing
-                # them now makes every CDF read of this commit an
-                # ordinary file scan (one partition per change file)
-                # instead of a read-time single-task multiset diff
-                # over everything it touched. A DV-masked touched file
+                # where the predicate IS TRUE — the keep-filter's exact
+                # complement. Writing them now makes every CDF read of
+                # this commit an ordinary file scan instead of a
+                # read-time multiset diff. A DV-masked touched file
                 # forces this path even when no survivors staged: a
                 # raw per-file delete scan would resurrect its already
                 # -dead rows into the feed.
-                deleted = src.filter(condition)
-                cdf_files = _stage_change_data(deleted, None, path)
+                cdf_files = _stage_change_data(preimage, None, path)
             else:
                 # every touched row dies → a pure-remove commit: the
                 # remove actions ARE the exact change set (CDF readers
@@ -1916,34 +1993,39 @@ def delete_where(
                 # partitions); change files would duplicate whole
                 # files for nothing
                 cdf_files = None
-        # write-amplification observability, all metadata-plane: rows
-        # per file come from the snapshot fold and the staged footers.
-        # Legacy manifests without per-file row counts fold to -1 —
-        # row metrics are nulled rather than stamped nonsensical
-        # (round-8 advice); file counts stay exact either way.
-        rows_known = all(snapshot[f] >= 0 for f in touched)
-        rows_touched = sum(snapshot[f] for f in touched)
-        rows_kept = sum(n for _, n, *_ in staged)
         metrics = {
-            "op": "delete",
+            "op": op,
             "files_removed": len(touched),
             "files_added": len(staged),
             "files_carried": len(snapshot) - len(touched),
-            "rows_deleted": rows_touched - rows_kept if rows_known else None,
-            "rows_rewritten": rows_kept,
         }
+        if assignments is None:
+            # write-amplification observability, all metadata-plane:
+            # rows per file come from the snapshot fold and the staged
+            # footers. Legacy manifests without per-file row counts
+            # fold to -1 — row metrics are nulled rather than stamped
+            # nonsensical (round-8 advice); file counts stay exact.
+            rows_kept = sum(n for _, n, *_ in staged)
+            rows_known = all(snapshot[f] >= 0 for f in touched)
+            metrics["rows_deleted"] = (
+                sum(snapshot[f] for f in touched) - rows_kept
+                if rows_known
+                else None
+            )
+            metrics["rows_rewritten"] = rows_kept
+        else:
+            # preimage + postimage rows per matched row: derive the
+            # matched count from the staged change-file row totals
+            # instead of an extra count() job
+            metrics["rows_updated"] = sum(e["rows"] for e in cdf_files) // 2
         extra = {"metrics": metrics}
         if cdf_files is not None:
             extra["cdf"] = {"files": cdf_files}
         if touched:
-            extra.update(_union_schema_extra(path, base, keep))
-        try:
-            _commit(path, base + 1, actions, extra=extra)
-            _maybe_checkpoint(path, base + 1)
-            return base + 1
-        except CommitConflict:
-            continue  # re-resolve the snapshot and re-plan
-    raise CommitConflict(f"lost {max_retries} delete races on {path}")
+            extra.update(_union_schema_extra(path, base, out))
+        return actions, extra
+
+    return _transact(path, op, plan)
 
 
 def _stage_dv(df: DataFrame, path: str, *, rows_hint: int | None = None) -> list[str]:
@@ -2008,9 +2090,10 @@ def _dv_mask_actions(
     row dies gets a plain remove; survivors re-add with conservative
     stats (superset of live rows) and BLANK null counts (a physical
     null count over a masked file can over-prune IS NOT NULL). If the
-    caller's commit later fails (constraint violation, lost race) the
-    staged dv files simply orphan — unreferenced bytes, vacuum's job —
-    exactly the crash story of every staged write."""
+    caller's commit later fails (constraint violation, or a lost race
+    that sends ``_transact`` back to re-plan) the staged dv files
+    simply orphan — unreferenced bytes, vacuum's job — exactly the
+    crash story of every staged write."""
     # per-file new-death counts — bounded: one row per TOUCHED file
     new_counts = {
         r["file"]: r["n"]
@@ -2082,7 +2165,6 @@ def _dv_commit(
     condition,
     *,
     assignments: dict | None = None,
-    max_retries: int = 3,
 ) -> int:
     """The deletion-vector commit shared by ``delete_where(mode=
     "dv")`` (``assignments=None``) and ``update_where(mode="dv")``.
@@ -2095,12 +2177,12 @@ def _dv_commit(
     matched rows additionally restage WITH the assignments applied as
     fresh adds (validated against CHECK constraints) — so bytes
     written scale with matched rows, never touched-file size. Change
-    files stamp the preimage (and postimage) for CDF exactly like the
-    CoW paths."""
+    files stamp the preimage (and postimage) for CDF exactly like
+    ``_cow_commit``."""
     _require_writer(path)
-    pb = table_partitioning(path) if committed_versions(path) else []
-    for _ in range(max_retries):
-        base = committed_versions(path)[-1]
+
+    def plan(base: int):
+        pb = table_partitioning(path, version=base)
         fold = _fold_live(path, base)
         snapshot = sorted(fold)
         if not snapshot:
@@ -2141,14 +2223,7 @@ def _dv_commit(
         postimage = None
         post_staged: list[tuple] = []
         if assignments is not None and touched:
-            postimage = preimage.select(
-                *[
-                    (assignments[c] if c in assignments else F.col(c)).alias(
-                        c
-                    )
-                    for c in preimage.columns
-                ]
-            )
+            postimage = _assigned(preimage, assignments)
             post_staged = _stage_data(
                 postimage, path, partition_by=pb or None
             )
@@ -2188,24 +2263,14 @@ def _dv_commit(
             ),
         }
         extra = _union_schema_extra(path, base, schema)
-        proto = extra.get("protocol") or table_protocol(path, version=base)
-        extra["protocol"] = {
-            "min_reader_version": max(
-                4, int(proto.get("min_reader_version", 1))
-            ),
-            "min_writer_version": max(
-                5, int(proto.get("min_writer_version", 1))
-            ),
-        }
+        extra["protocol"] = _protocol_at_least(path, base, 4, 5)
         extra["metrics"] = metrics
         extra["cdf"] = {"files": cdf_files}
-        try:
-            _commit(path, base + 1, actions, extra=extra)
-            _maybe_checkpoint(path, base + 1)
-            return base + 1
-        except CommitConflict:
-            continue  # re-resolve the snapshot and re-plan
-    raise CommitConflict(f"lost {max_retries} DV commit races on {path}")
+        return actions, extra
+
+    return _transact(
+        path, "delete" if assignments is None else "update", plan
+    )
 
 
 def update_where(
@@ -2215,7 +2280,6 @@ def update_where(
     set: dict,
     *,
     mode: str = "cow",
-    max_retries: int = 3,
 ) -> int:
     """UPDATE as a log transaction — the missing member of the DML
     tetrad (append/delete/merge landed earlier rounds). ``set`` maps
@@ -2226,7 +2290,8 @@ def update_where(
     against CHECK constraints before anything commits.
 
     ``mode="cow"`` rewrites only the files containing matches (one
-    provenance scan; untouched files carry by reference).
+    provenance scan; untouched files carry by reference; the
+    ``_cow_commit`` shared with DELETE).
     ``mode="dv"`` masks the preimage positions with a deletion vector
     and adds ONLY the postimage rows — bytes written scale with
     matched rows, not touched-file size. Both stamp commit-time
@@ -2239,7 +2304,7 @@ def update_where(
     if mode not in ("cow", "dv"):
         raise ValueError(f"mode must be 'cow' or 'dv', got {mode!r}")
     _require_writer(path)
-    schema = _latest_schema(path, committed_versions(path)[-1])
+    schema = _latest_schema(path, _resolve_version(path, None)[0])
     if schema is not None:
         unknown = sorted(n for n in assignments if n not in
                          schema.fieldNames())
@@ -2250,82 +2315,8 @@ def update_where(
             )
     if not assignments:
         raise ValueError("SET must assign at least one column")
-    if mode == "dv":
-        return _dv_commit(
-            spark, path, condition,
-            assignments=assignments, max_retries=max_retries,
-        )
-    pb = table_partitioning(path)
-    for _ in range(max_retries):
-        base = committed_versions(path)[-1]
-        snapshot = live_files(path, version=base)
-        rel_by_base = {os.path.basename(f): f for f in snapshot}
-        touched = [
-            rel_by_base[r["_txb"]]
-            for r in _provenance_view(spark, path, snapshot, base)
-            .filter(condition)
-            .select("_txb")
-            .distinct()
-            .collect()  # bounded: one row per TOUCHED FILE
-        ]
-        actions: list[dict] = [{"remove": f} for f in touched]
-        staged: list[tuple] = []
-        cdf_files: list[dict] = []
-        rows_updated = 0
-        if touched:
-            rows = _mapped_read(spark, path, touched, version=base)
-            # when() fires only where condition IS TRUE: NULL rows
-            # keep their preimage (3VL) — and one select evaluates
-            # every RHS against the preimage row (simultaneous)
-            rewritten = rows.select(
-                *[
-                    F.when(condition, assignments[c])
-                    .otherwise(F.col(c))
-                    .alias(c)
-                    if c in assignments
-                    else F.col(c)
-                    for c in rows.columns
-                ]
-            )
-            staged = _stage_data(rewritten, path, partition_by=pb or None)
-            from .constraints import table_constraints, validate_staged
-
-            validate_staged(
-                spark, path, [f for f, *_ in staged],
-                table_constraints(path, version=base),
-            )
-            actions += _add_actions(staged)
-            preimage = rows.filter(condition)
-            postimage = preimage.select(
-                *[
-                    (assignments[c] if c in assignments else F.col(c)).alias(
-                        c
-                    )
-                    for c in preimage.columns
-                ]
-            )
-            cdf_files = _stage_change_data(preimage, postimage, path)
-            # preimage + postimage rows per matched row: derive the
-            # matched count from the staged change-file row totals
-            # instead of an extra count() job
-            rows_updated = sum(e["rows"] for e in cdf_files) // 2
-        metrics = {
-            "op": "update",
-            "files_removed": len(touched),
-            "files_added": len(staged),
-            "files_carried": len(snapshot) - len(touched),
-            "rows_updated": rows_updated,
-        }
-        extra = {"metrics": metrics, "cdf": {"files": cdf_files}}
-        if touched:
-            extra.update(_union_schema_extra(path, base, rewritten))
-        try:
-            _commit(path, base + 1, actions, extra=extra)
-            _maybe_checkpoint(path, base + 1)
-            return base + 1
-        except CommitConflict:
-            continue  # re-resolve the snapshot and re-plan
-    raise CommitConflict(f"lost {max_retries} update races on {path}")
+    commit = _dv_commit if mode == "dv" else _cow_commit
+    return commit(spark, path, condition, assignments=assignments)
 
 
 def restore_table(
@@ -2334,7 +2325,6 @@ def restore_table(
     *,
     version: int | None = None,
     timestamp=None,
-    max_retries: int = 3,
 ) -> int:
     """RESTORE TABLE ... TO VERSION/TIMESTAMP AS OF (Delta's restore):
     ONE commit whose actions reset the live file set to the target
@@ -2351,8 +2341,8 @@ def restore_table(
     column-mapping DDL (rename/drop since the target) refuse — the
     two snapshots' logical views don't line up."""
     _require_writer(path)
-    for _ in range(max_retries):
-        base = committed_versions(path)[-1]
+
+    def plan(base: int):
         target, _ = _resolve_version(path, version, timestamp=timestamp)
         if target >= base:
             if target == base:
@@ -2443,13 +2433,9 @@ def restore_table(
         target_schema = _latest_schema(path, target)
         if target_schema is not None:
             extra["schema"] = target_schema.json()
-        try:
-            _commit(path, base + 1, actions, extra=extra)
-            _maybe_checkpoint(path, base + 1)
-            return base + 1
-        except CommitConflict:
-            continue  # re-resolve both snapshots and re-plan
-    raise CommitConflict(f"lost {max_retries} restore races on {path}")
+        return actions, extra
+
+    return _transact(path, "restore", plan)
 
 
 def shallow_clone(
@@ -2537,8 +2523,6 @@ def merge_upsert(
     path: str,
     updates: DataFrame,
     key_cols: list[str],
-    *,
-    max_retries: int = 3,
 ) -> int:
     """File-pruned MERGE INTO (upsert): rows whose keys match an
     update row are REPLACED wholesale (an explicit NULL in the update
@@ -2554,12 +2538,11 @@ def merge_upsert(
     contract (the nightly-batch regime) — AQE broadcasts it in both
     the provenance scan and the anti-join."""
     _require_writer(path)
-    pb = table_partitioning(path) if committed_versions(path) else []
     keys = updates.select(*key_cols).distinct()
-    for _ in range(max_retries):
-        base = committed_versions(path)[-1]
+
+    def plan(base: int):
+        pb = table_partitioning(path, version=base)
         snapshot = live_files(path, version=base)
-        rel_by_base = {os.path.basename(f): f for f in snapshot}
         # provenance is projected scan-side inside the view (the
         # historical input_file_name() form lost the scan context
         # after a join and returned '' — observed as a '' remove
@@ -2568,13 +2551,7 @@ def merge_upsert(
         prov = _provenance_view(spark, path, snapshot, base).select(
             *key_cols, F.col("_txb")
         )
-        touched = [
-            rel_by_base[r["_txb"]]
-            for r in prov.join(keys, key_cols)
-            .select("_txb")
-            .distinct()
-            .collect()  # bounded: one row per TOUCHED FILE
-        ]
+        touched = _touched_files(prov.join(keys, key_cols), snapshot)
         actions: list[dict] = [{"remove": f} for f in touched]
         # stage + validate the UPDATE side FIRST: survivors are
         # pre-existing rows and cannot violate a recorded constraint,
@@ -2637,26 +2614,17 @@ def merge_upsert(
             "rows_rewritten": rows_survived,
             "rows_upserted": rows_upserted,
         }
-        try:
-            # schema stamped as the union with the update frame's (the
-            # wholesale-replacement side carries the full schema by
-            # contract) — merge commits previously stamped NO schema,
-            # so a merge after evolution rolled _latest_schema back
-            _commit(
-                path,
-                base + 1,
-                actions,
-                extra={
-                    "metrics": metrics,
-                    "cdf": {"files": cdf_files},
-                    **_union_schema_extra(path, base, updates),
-                },
-            )
-            _maybe_checkpoint(path, base + 1)
-            return base + 1
-        except CommitConflict:
-            continue  # re-resolve the snapshot and re-plan
-    raise CommitConflict(f"lost {max_retries} merge races on {path}")
+        # schema stamped as the union with the update frame's (the
+        # wholesale-replacement side carries the full schema by
+        # contract) — merge commits previously stamped NO schema, so a
+        # merge after evolution rolled _latest_schema back
+        return actions, {
+            "metrics": metrics,
+            "cdf": {"files": cdf_files},
+            **_union_schema_extra(path, base, updates),
+        }
+
+    return _transact(path, "merge", plan)
 
 
 _MERGE_WHENS = {
@@ -2682,7 +2650,6 @@ def merge_into(
     clauses: list[dict],
     mode: str = "cow",
     evolve_schema: bool = False,
-    max_retries: int = 3,
 ) -> int:
     """Full conditional MERGE INTO (Delta's multi-clause form; the
     round-11 verdict's item 2 — ``merge_upsert`` above stays the
@@ -2751,8 +2718,6 @@ def merge_into(
             raise ValueError("UPDATE clause needs a non-empty 'set'")
         norm.append(dict(cl))
     _require_writer(path)
-    if not committed_versions(path):
-        raise ValueError(f"no such table: {path} (create_table first)")
     scols = source.columns
     if "t" in scols or "s" in scols:
         raise ValueError(
@@ -2776,7 +2741,6 @@ def merge_into(
             "updates the matched target row is ambiguous; distinct "
             "the source on the key columns first"
         )
-    pb = table_partitioning(path)
     update_idx = [
         i for i, cl in enumerate(norm)
         if cl["when"] != "not_matched" and cl["action"] == "update"
@@ -2788,8 +2752,9 @@ def merge_into(
     insert_idx = [
         i for i, cl in enumerate(norm) if cl["when"] == "not_matched"
     ]
-    for _ in range(max_retries):
-        base = committed_versions(path)[-1]
+
+    def plan(base: int):
+        pb = table_partitioning(path, version=base)
         fold = _fold_live(path, base)
         snapshot = sorted(fold)
         schema = _latest_schema(path, base)
@@ -3082,28 +3047,14 @@ def merge_into(
         }
         extra = _union_schema_extra(path, base, out_schema)
         if mode == "dv":
-            proto = extra.get("protocol") or table_protocol(
-                path, version=base
-            )
-            extra["protocol"] = {
-                "min_reader_version": max(
-                    4, int(proto.get("min_reader_version", 1))
-                ),
-                "min_writer_version": max(
-                    5, int(proto.get("min_writer_version", 1))
-                ),
-            }
+            extra["protocol"] = _protocol_at_least(path, base, 4, 5)
         extra["metrics"] = metrics
         extra["cdf"] = {"files": cdf_files}
-        try:
-            _commit(path, base + 1, actions, extra=extra)
-            _maybe_checkpoint(path, base + 1)
-            return base + 1
-        except CommitConflict:
-            # staged-but-uncommitted files orphan harmlessly on a lost
-            # race; the retry replans against the fresh snapshot
-            continue
-    raise CommitConflict(f"lost {max_retries} merge-into races on {path}")
+        # staged-but-uncommitted files orphan harmlessly on a lost
+        # race; the retry replans against the fresh snapshot
+        return actions, extra
+
+    return _transact(path, "merge-into", plan)
 
 
 def compact(
@@ -3115,7 +3066,6 @@ def compact(
     zorder_files: int | None = None,
     bits: int = 8,
     where=None,
-    max_retries: int = 3,
 ) -> int | None:
     """OPTIMIZE: bin-pack undersized live files into ~``target_bytes``
     rewrites and commit remove+add — one transaction, snapshot
@@ -3148,12 +3098,12 @@ def compact(
     from ..operators.compaction import compaction_plan
 
     _require_writer(path)
-    # partitioned tables: rewrites restage through partitionBy, so a
-    # bin mixing partitions still lands every row in its correct
-    # value directory (it just emits one output file per value)
-    pb = table_partitioning(path) if committed_versions(path) else []
-    for _ in range(max_retries):
-        base = committed_versions(path)[-1]
+
+    def plan(base: int):
+        # partitioned tables: rewrites restage through partitionBy, so
+        # a bin mixing partitions still lands every row in its correct
+        # value directory (it just emits one output file per value)
+        pb = table_partitioning(path, version=base)
         all_live = live_files(path, version=base)
         if where is not None:
             # maintenance scope: only files that MAY match — the same
@@ -3188,20 +3138,12 @@ def compact(
                 "files_carried": len(all_live) - len(snapshot),
                 "rows_rewritten": sum(n for _, n, *_ in staged),
             }
-            try:
-                # OPTIMIZE rewrites are data-invisible by construction
-                # (read → recluster → write, no row changes): stamp a
-                # KNOWN-EMPTY change set so CDF readers skip the
-                # commit outright instead of proving invisibility with
-                # a read-time diff (Delta's dataChange=false)
-                _commit(
-                    path, base + 1, actions,
-                    extra={"metrics": metrics, "cdf": {"files": []}},
-                )
-                _maybe_checkpoint(path, base + 1)
-                return base + 1
-            except CommitConflict:
-                continue
+            # OPTIMIZE rewrites are data-invisible by construction
+            # (read → recluster → write, no row changes): stamp a
+            # KNOWN-EMPTY change set so CDF readers skip the commit
+            # outright instead of proving invisibility with a
+            # read-time diff (Delta's dataChange=false)
+            return actions, {"metrics": metrics, "cdf": {"files": []}}
         inv = [
             (f, os.path.getsize(os.path.join(path, f)))
             for f in sorted(snapshot)
@@ -3209,7 +3151,7 @@ def compact(
         small = [(f, b) for f, b in inv if b < target_bytes]
         if len(small) < 2:
             return None
-        plan = compaction_plan(
+        bin_map = compaction_plan(
             spark.createDataFrame(
                 [(f, b, i) for i, (f, b) in enumerate(small)],
                 "file_id string, bytes long, order_key long",
@@ -3217,7 +3159,7 @@ def compact(
             target_bytes=target_bytes,
         )
         bins: dict[int, list[str]] = {}
-        for r in plan.collect():  # bin map: one row per FILE (metadata)
+        for r in bin_map.collect():  # bin map: one row per FILE (metadata)
             bins.setdefault(r["bin_id"], []).append(r["file_id"])
         actions: list[dict] = []
         n_removed = n_added = rows_rewritten = 0
@@ -3250,17 +3192,10 @@ def compact(
             "files_carried": len(all_live) - n_removed,
             "rows_rewritten": rows_rewritten,
         }
-        try:
-            # same KNOWN-EMPTY change-set stamp as the zorder branch
-            _commit(
-                path, base + 1, actions,
-                extra={"metrics": metrics, "cdf": {"files": []}},
-            )
-            _maybe_checkpoint(path, base + 1)
-            return base + 1
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"lost {max_retries} compaction races on {path}")
+        # same KNOWN-EMPTY change-set stamp as the zorder branch
+        return actions, {"metrics": metrics, "cdf": {"files": []}}
+
+    return _transact(path, "compaction", plan)
 
 
 def change_feed(

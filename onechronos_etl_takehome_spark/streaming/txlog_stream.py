@@ -15,11 +15,11 @@ the log never references — invisible to readers, reclaimed by vacuum
 writer died. Pinned by a replay test (same batch twice → one commit,
 no duplicate rows) in tests/test_txlog_stream.py.
 
-Concurrent writers compose: the append retries its version under the
-exclusive-create protocol, and two DIFFERENT batch_ids landing
-concurrently are both kept (they are different data); two writers
-replaying the SAME batch_id race to one commit — the loser re-checks
-the log, sees the batch_id, and skips.
+Concurrent writers compose: the append retries its version through
+``txlog._transact`` (the one commit loop), and two DIFFERENT
+batch_ids landing concurrently are both kept (they are different
+data); two writers replaying the SAME batch_id race to one commit —
+the loser re-checks the log, sees the batch_id, and skips.
 
 Scale: per batch, one staged parquet write + one metadata commit; the
 batch-id fold is O(commits) driver-side (bounded by the same manifest
@@ -50,7 +50,7 @@ def committed_batch_ids(path: str) -> set[int]:
 
 
 def process_txlog_batch(
-    batch_df: DataFrame, batch_id: int, path: str, *, max_retries: int = 5
+    batch_df: DataFrame, batch_id: int, path: str
 ) -> int | None:
     """Idempotent append of one microbatch; returns the committed
     version, or None when the batch_id already landed (replay)."""
@@ -69,21 +69,16 @@ def process_txlog_batch(
             batch_df.sparkSession, path, [a["add"] for a in adds],
             table_constraints(path),
         )
-    for _ in range(max_retries):
-        versions = txlog.committed_versions(path)
-        version = (versions[-1] + 1) if versions else 0
+
+    def plan(base: int):
         # losing a version race can mean a concurrent replay of the
         # SAME batch landed — re-check before retrying the link
         if batch_id in committed_batch_ids(path):
             return None
-        try:
-            txlog._commit_with_batch(path, version, adds, batch_id)
-            txlog._maybe_checkpoint(path, version)
-            return version
-        except txlog.CommitConflict:
-            continue
-    raise txlog.CommitConflict(
-        f"lost {max_retries} commit races for batch {batch_id} on {path}"
+        return adds, {"batch_id": batch_id}
+
+    return txlog._transact(
+        path, f"stream-append (batch {batch_id})", plan, create=True
     )
 
 

@@ -23,10 +23,11 @@ Design (all invariants inherited from sources/txlog.py):
   from its own freshly-written footer (``txlog._footer_stats``) and
   ships them driver-ward in its commit message, so format-written
   files prune exactly like API-written ones (x36/x39/x44).
-- **append** commits add-actions under the exclusive-create protocol
-  with retry; the manifest schema is the UNION of the previous schema
-  and the written frame (column-addition evolution, Delta metaData
-  semantics). A first append CREATES the table (version 0).
+- **append** commits add-actions through ``txlog._transact``, the
+  one commit loop every txlog write shares; the manifest schema is
+  the UNION of the previous schema and the written frame
+  (column-addition evolution, Delta metaData semantics). A first
+  append CREATES the table (version 0).
 - **overwrite** commits removes of the whole prior live set plus the
   new adds in ONE atomic manifest — readers see the old or the new
   table, never a mix — and stamps the written schema as the table
@@ -153,12 +154,11 @@ def _commit_write(
     *,
     overwrite: bool,
     batch_id: int | None = None,
-    max_retries: int = 5,
 ) -> int | None:
     """Driver side: fold the tasks' adds into ONE manifest commit
-    under the exclusive-create retry protocol. Returns the committed
-    version, or None when ``batch_id`` already landed (streaming
-    replay)."""
+    through ``txlog._transact`` (the first write creates the table).
+    Returns the committed version, or None when ``batch_id`` already
+    landed (streaming replay)."""
     from pyspark.sql.types import StructType
 
     from .txlog_stream import committed_batch_ids
@@ -170,15 +170,14 @@ def _commit_write(
     # protocol gate: refuse feature-newer tables BEFORE committing
     # (the staged task files then unlink via the abort path contract)
     txlog._require_writer(path)
-    for _ in range(max_retries):
-        versions = txlog.committed_versions(path)
+
+    def plan(base: int):
         if batch_id is not None and batch_id in committed_batch_ids(path):
             # replay of an already-landed microbatch: this attempt's
             # files stay orphans the log never references
             return None
-        version = (versions[-1] + 1) if versions else 0
-        if overwrite and versions:
-            prior = sorted(txlog.live_files(path, version=versions[-1]))
+        if overwrite and base >= 0:
+            prior = sorted(txlog.live_files(path, version=base))
             actions = [{"remove": f} for f in prior] + add_actions
             extra: dict = txlog._schema_extra(schema)  # schema replace
             metrics = {
@@ -192,8 +191,8 @@ def _commit_write(
             actions = add_actions
             extra = (
                 txlog._schema_extra(schema)
-                if not versions
-                else txlog._union_schema_extra(path, versions[-1], schema)
+                if base < 0
+                else txlog._union_schema_extra(path, base, schema)
             )
             metrics = {
                 "op": "write-append",
@@ -203,15 +202,9 @@ def _commit_write(
         extra["metrics"] = metrics
         if batch_id is not None:
             extra["batch_id"] = batch_id
-        try:
-            txlog._commit(path, version, actions, extra=extra)
-            txlog._maybe_checkpoint(path, version)
-            return version
-        except txlog.CommitConflict:
-            continue  # re-resolve the base snapshot and re-plan
-    raise txlog.CommitConflict(
-        f"lost {max_retries} write commit races on {path}"
-    )
+        return actions, extra
+
+    return txlog._transact(path, "write", plan, create=True)
 
 
 class TxlogBatchWriter(DataSourceArrowWriter):

@@ -1322,8 +1322,7 @@ class TestRound11Races:
         def do_delete():
             try:
                 txlog.delete_where(
-                    spark, table, F.col("k") % 100 == 0, mode="dv",
-                    max_retries=5,
+                    spark, table, F.col("k") % 100 == 0, mode="dv"
                 )
             except Exception as e:  # pragma: no cover - surfaced below
                 errs.append(e)
@@ -1378,9 +1377,7 @@ class TestRound11Races:
 
         def do_restore():
             try:
-                txlog.restore_table(
-                    spark, table, version=v_del - 1, max_retries=5
-                )
+                txlog.restore_table(spark, table, version=v_del - 1)
             except Exception as e:  # pragma: no cover
                 errs.append(e)
 

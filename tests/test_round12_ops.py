@@ -1059,7 +1059,7 @@ class TestMergeInto:
                 txlog.merge_into(
                     spark, table,
                     self._cdc(spark, n=1000), ["k"],
-                    clauses=_CDC_CLAUSES, max_retries=5,
+                    clauses=_CDC_CLAUSES,
                 )
             except Exception as e:  # pragma: no cover - surfaced below
                 errs.append(e)

@@ -13,7 +13,11 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from onechronos_etl_takehome_spark.sources import constraints as C
 from onechronos_etl_takehome_spark.sources import txlog
+from onechronos_etl_takehome_spark.streaming.txlog_stream import (
+    process_txlog_batch,
+)
 
 
 @pytest.fixture()
@@ -647,3 +651,238 @@ class TestRound8Hardening:
         txlog.create_table(_df(spark, 0, 0, "a"), table)
         out = txlog.read_table(spark, table)
         assert out.columns == ["id", "tag"] and out.count() == 0
+
+
+# ---------------------------------------------------------------------------
+# The one commit loop (txlog._transact): every write after version 0
+# plans against the newest version and re-plans on a lost race
+# ---------------------------------------------------------------------------
+
+
+def _kv(spark, lo, hi, parts=1):
+    return spark.range(lo, hi, numPartitions=parts).select(
+        F.col("id").alias("k"), (F.col("id") * 10).alias("v")
+    )
+
+
+def _src(spark):
+    return spark.createDataFrame([(1, 100), (20, 200)], "k long, v long")
+
+
+_BASE_ROWS = [(k, k * 10) for k in range(10)]
+_MERGED_ROWS = sorted(
+    [(k, 100 if k == 1 else k * 10) for k in range(10)] + [(20, 200)]
+)
+_UPDATED_ROWS = [(k, -k * 10 if k < 3 else k * 10) for k in range(10)]
+_UPSERT_CLAUSES = [
+    {"when": "matched", "action": "update", "set": {"v": "s.v"}},
+    {"when": "not_matched", "action": "insert"},
+]
+
+# op → (prepare, write, rows after the write); ``prepare`` runs before
+# the commit patch goes in
+_WRITES = {
+    "append": (
+        None,
+        lambda s, t: txlog.append(_kv(s, 10, 12), t),
+        _BASE_ROWS + [(10, 100), (11, 110)],
+    ),
+    "delete-cow": (
+        None,
+        lambda s, t: txlog.delete_where(s, t, F.col("k") < 3),
+        _BASE_ROWS[3:],
+    ),
+    "delete-dv": (
+        None,
+        lambda s, t: txlog.delete_where(s, t, F.col("k") < 3, mode="dv"),
+        _BASE_ROWS[3:],
+    ),
+    "update-cow": (
+        None,
+        lambda s, t: txlog.update_where(s, t, F.col("k") < 3, {"v": "-v"}),
+        _UPDATED_ROWS,
+    ),
+    "update-dv": (
+        None,
+        lambda s, t: txlog.update_where(
+            s, t, F.col("k") < 3, {"v": "-v"}, mode="dv"
+        ),
+        _UPDATED_ROWS,
+    ),
+    "merge-into-cow": (
+        None,
+        lambda s, t: txlog.merge_into(
+            s, t, _src(s), ["k"], clauses=_UPSERT_CLAUSES
+        ),
+        _MERGED_ROWS,
+    ),
+    "merge-into-dv": (
+        None,
+        lambda s, t: txlog.merge_into(
+            s, t, _src(s), ["k"], clauses=_UPSERT_CLAUSES, mode="dv"
+        ),
+        _MERGED_ROWS,
+    ),
+    "merge-upsert": (
+        None,
+        lambda s, t: txlog.merge_upsert(s, t, _src(s), ["k"]),
+        _MERGED_ROWS,
+    ),
+    "restore": (
+        lambda s, t: txlog.delete_where(s, t, F.col("k") < 3),
+        lambda s, t: txlog.restore_table(s, t, version=0),
+        _BASE_ROWS,
+    ),
+    "compact": (None, lambda s, t: txlog.compact(s, t), _BASE_ROWS),
+    "rename-column": (
+        None,
+        lambda s, t: txlog.rename_column(s, t, "v", "w"),
+        _BASE_ROWS,
+    ),
+    "drop-column": (
+        None,
+        lambda s, t: txlog.drop_column(s, t, "v"),
+        [(k,) for k in range(10)],
+    ),
+    "add-constraint": (
+        None,
+        lambda s, t: C.add_constraint(s, t, "v_pos", "v >= 0"),
+        _BASE_ROWS,
+    ),
+    "drop-constraint": (
+        lambda s, t: C.add_constraint(s, t, "v_pos", "v >= 0"),
+        lambda s, t: C.drop_constraint(s, t, "v_pos"),
+        _BASE_ROWS,
+    ),
+    "stream-batch": (
+        None,
+        lambda s, t: process_txlog_batch(_kv(s, 10, 12), 7, t),
+        _BASE_ROWS + [(10, 100), (11, 110)],
+    ),
+}
+
+
+class TestCommitLoop:
+    @pytest.mark.parametrize(
+        "write",
+        [
+            lambda s, p: txlog.delete_where(s, p, F.col("k") < 3),
+            lambda s, p: txlog.delete_where(s, p, F.col("k") < 3, mode="dv"),
+            lambda s, p: txlog.update_where(s, p, F.col("k") < 3, {"v": "0"}),
+            lambda s, p: txlog.restore_table(s, p, version=0),
+            lambda s, p: txlog.compact(s, p),
+            lambda s, p: txlog.rename_column(s, p, "v", "w"),
+            lambda s, p: txlog.drop_column(s, p, "v"),
+            lambda s, p: txlog.merge_upsert(s, p, _src(s), ["k"]),
+            lambda s, p: txlog.merge_into(
+                s, p, _src(s), ["k"], clauses=_UPSERT_CLAUSES
+            ),
+            lambda s, p: C.add_constraint(s, p, "c", "v > 0"),
+            lambda s, p: C.drop_constraint(s, p, "c"),
+        ],
+        ids=[
+            "delete-cow", "delete-dv", "update", "restore", "compact",
+            "rename-column", "drop-column", "merge-upsert", "merge-into",
+            "add-constraint", "drop-constraint",
+        ],
+    )
+    def test_write_to_empty_directory_is_not_a_table(
+        self, spark, tmp_path, write
+    ):
+        with pytest.raises(ValueError, match="not a txlog table"):
+            write(spark, str(tmp_path))
+        assert os.listdir(tmp_path) == []  # nothing staged or committed
+
+    @pytest.mark.parametrize("op", sorted(_WRITES))
+    def test_lost_race_replans_at_new_head(
+        self, spark, table, monkeypatch, op
+    ):
+        prepare, write, expected = _WRITES[op]
+        txlog.create_table(_kv(spark, 0, 10, parts=2), table)
+        if prepare is not None:
+            prepare(spark, table)
+        base = txlog.committed_versions(table)[-1]
+        orig = txlog._commit
+        attempts = []
+
+        def lose_first(path, version, actions, extra=None):
+            attempts.append(version)
+            if len(attempts) == 1:
+                # a real concurrent winner takes this version first
+                orig(path, version, [])
+                raise txlog.CommitConflict("simulated lost race")
+            return orig(path, version, actions, extra=extra)
+
+        monkeypatch.setattr(txlog, "_commit", lose_first)
+        assert write(spark, table) == base + 2
+        assert attempts == [base + 1, base + 2]
+        got = sorted(
+            tuple(r) for r in txlog.read_table(spark, table).collect()
+        )
+        assert got == sorted(expected)
+
+    @pytest.mark.parametrize(
+        "op, name",
+        [
+            ("append", "append"),
+            ("delete-cow", "delete"),
+            ("rename-column", "rename"),
+            ("add-constraint", "add-constraint"),
+            ("stream-batch", r"stream-append \(batch 7\)"),
+        ],
+    )
+    def test_always_losing_gives_up_after_five_attempts(
+        self, spark, table, monkeypatch, op, name
+    ):
+        write = _WRITES[op][1]
+        txlog.create_table(_kv(spark, 0, 10, parts=2), table)
+        before = txlog.committed_versions(table)
+        attempts = []
+
+        def always_lose(path, version, actions, extra=None):
+            attempts.append(version)
+            raise txlog.CommitConflict("simulated lost race")
+
+        monkeypatch.setattr(txlog, "_commit", always_lose)
+        with pytest.raises(
+            txlog.CommitConflict, match=f"lost 5 {name} races on {table}$"
+        ):
+            write(spark, table)
+        assert attempts == [before[-1] + 1] * 5
+        assert txlog.committed_versions(table) == before
+
+    def test_commit_protocol_is_owned_by_txlog(self):
+        """Only ``_transact`` and the two version-0 creates publish a
+        manifest; no other module reaches the commit primitives."""
+        import ast
+        import pathlib
+
+        import onechronos_etl_takehome_spark as pkg
+
+        owners = {"_transact", "create_table", "shallow_clone"}
+        primitives = {"_commit", "_maybe_checkpoint"}
+
+        def uses(tree) -> bool:
+            return any(
+                (isinstance(n, ast.Attribute) and n.attr in primitives)
+                or (isinstance(n, ast.Name) and n.id in primitives)
+                or (isinstance(n, ast.alias) and n.name in primitives)
+                for n in ast.walk(tree)
+            )
+
+        root = pathlib.Path(pkg.__file__).parent
+        offenders = []
+        for src in sorted(root.rglob("*.py")):
+            rel = src.relative_to(root).as_posix()
+            tree = ast.parse(src.read_text())
+            if rel != "sources/txlog.py":
+                offenders += [rel] if uses(tree) else []
+                continue
+            offenders += [
+                f"{rel}::{fn.name}"
+                for fn in tree.body
+                if isinstance(fn, ast.FunctionDef)
+                and fn.name not in owners | primitives
+                and uses(fn)
+            ]
+        assert offenders == []
