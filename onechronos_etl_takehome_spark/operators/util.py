@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import math
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame
 
@@ -70,3 +71,19 @@ def truncate_lineage(df: DataFrame) -> DataFrame:
     if sc.getCheckpointDir() is not None:
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
+
+
+def side_by_side(*thunks):
+    """Run independent driver-side jobs concurrently, one thread each,
+    and return their results in argument order.
+
+    Every thunk runs to completion before anything is raised; then the
+    first failure in argument order is re-raised. A caller never sees
+    an error while a sibling job is still writing, so whatever it
+    cleans up or retries after the error is final. Spark schedules
+    jobs from several driver threads at once, so one job's idle cores
+    take the other's tasks.
+    """
+    with ThreadPoolExecutor(len(thunks)) as pool:
+        futures = [pool.submit(t) for t in thunks]
+    return [f.result() for f in futures]

@@ -47,13 +47,13 @@ them byte-for-byte (tests/test_reference_parity.py does).
 from __future__ import annotations
 
 import os
-from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import deterministic_dedup
+from ..operators.util import side_by_side
 from ..sources.readers import read_dirty_csv
 from ..sources.sinks import write_json
 from . import rules
@@ -375,13 +375,10 @@ class ReconciliationPipeline:
 
             # Both writes finish before the first error is re-raised
             # and before the cache is dropped.
-            with ThreadPoolExecutor(2) as pool:
-                writes = [
-                    pool.submit(sink, valid, "cleaned_trades_path"),
-                    pool.submit(sink, invalid, "exceptions_report_path"),
-                ]
-            for w in writes:
-                w.result()
+            side_by_side(
+                lambda: sink(valid, "cleaned_trades_path"),
+                lambda: sink(invalid, "exceptions_report_path"),
+            )
             obs = {k: o.get for k, o in self._observations.items()}
             n = {k: v["n"] for k, v in obs.items()}
             self.metrics = {

@@ -317,7 +317,7 @@ def x54_txlog_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The clustered leg (src → dst) and the partitioned leg
     # (psrc → pdst) are INDEPENDENT table lifecycles whose cost is a
     # chain of small commit jobs, each leaving most of local[32] idle.
-    # Overlap them from a 2-thread pool (guide §2.6: submit
+    # Overlap them with ``side_by_side`` (guide §2.6: submit
     # independent jobs concurrently so one chain's tail back-fills the
     # other's idle executors); each leg's commits stay strictly
     # ordered within its thread, and the result frame is built after
@@ -341,14 +341,9 @@ def x54_txlog_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
         txlog.shallow_clone(spark, psrc, pdst)
         txlog.delete_where(spark, pdst, F.col("orderkey") % 50 == 0)
 
-    from concurrent.futures import ThreadPoolExecutor
+    from ..operators.util import side_by_side
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for f in [
-            pool.submit(_clustered_leg),
-            pool.submit(_partitioned_leg),
-        ]:
-            f.result()  # re-raise leg failures, never swallow them
+    side_by_side(_clustered_leg, _partitioned_leg)
 
     def agg(df: DataFrame, tag: int) -> DataFrame:
         return df.groupBy("status").agg(

@@ -92,12 +92,17 @@ def validate_staged(
     count violations over the JUST-STAGED files (never the table),
     raise ConstraintViolation — deleting the doomed files — when any
     constraint is broken. A constraint naming a column the staged
-    frame lacks (pre-evolution producer) reads it as NULL via
-    mergeSchema against the table schema, and NULL passes."""
+    frame lacks (pre-evolution producer) reads it as NULL — the files
+    are read with the table's physical schema from the log — and NULL
+    passes."""
     if not constraints or not staged_files:
         return
-    reader = spark.read.option("mergeSchema", "true")
-    if txlog.table_partitioning(path):
+    latest = txlog.committed_versions(path)[-1]
+    pb = txlog.table_partitioning(path)
+    reader = txlog._parquet_reader(
+        spark, txlog._physical_schema(path, latest)
+    )
+    if pb:
         # partitioned staged files carry their partition values in
         # directory names; basePath restores them so a constraint on a
         # partition column validates against real values, not NULLs
@@ -111,21 +116,14 @@ def validate_staged(
         df = df.select(
             *[F.col(c).alias(inv.get(c, c)) for c in df.columns]
         )
-    # a constraint may reference table columns absent from this frame
-    schema = txlog._latest_schema(path, txlog.committed_versions(path)[-1])
-    if schema is not None:
-        pb = set(txlog.table_partitioning(path))
-        for field in schema.fields:
-            if field.name not in df.columns:
-                df = df.withColumn(
-                    field.name, F.lit(None).cast(field.dataType)
-                )
-            elif field.name in pb:
-                # directory values type-infer (string '7' → int): cast
-                # back to the declared type before validating
-                df = df.withColumn(
-                    field.name, F.col(field.name).cast(field.dataType)
-                )
+    # directory values type-infer (string '7' → int): cast partition
+    # columns back to their declared types before validating
+    schema = txlog._latest_schema(path, latest)
+    for field in schema.fields if schema is not None else []:
+        if field.name in pb:
+            df = df.withColumn(
+                field.name, F.col(field.name).cast(field.dataType)
+            )
     bad = count_violations(df, constraints)
     broken = {k: v for k, v in bad.items() if v}
     if broken:

@@ -355,19 +355,40 @@ def table_partitioning(
     return list(pb) if pb else []
 
 
-def _apply_mapping(df: DataFrame, schema, mapping: dict) -> DataFrame:
-    """Physical-name parquet frame → the LOGICAL columns of
-    ``schema``: each field selected from its physical column (aliased
-    back), null-padded when no live file carries it yet. The inverse
-    of the rename ``_stage_data`` applies at write time."""
-    cols = []
-    for fld in schema.fields:
-        phys = mapping.get(fld.name, fld.name)
-        if phys in df.columns:
-            cols.append(F.col(phys).alias(fld.name))
-        else:
-            cols.append(F.lit(None).cast(fld.dataType).alias(fld.name))
-    return df.select(*cols)
+def _physical_schema(
+    path: str, version: int, *, partitions: bool = False
+):
+    """The table's PHYSICAL file schema at ``version``, from the log:
+    the manifest schema with every logical name mapped to its storage
+    name. Partition columns are left out — data files do not carry
+    them, and Spark restores them from the value directories — unless
+    ``partitions`` (change files store them as plain columns). Columns
+    a file lacks read as NULL (column-addition evolution); tombstoned
+    physicals of dropped columns are not in it, so they stay hidden.
+    None for pre-schema manifests, whose readers must infer."""
+    from pyspark.sql.types import StructField, StructType
+
+    schema = _latest_schema(path, version)
+    if schema is None:
+        return None
+    mapping = _mapping_state(path, version=version)["map"]
+    skip = () if partitions else table_partitioning(path, version=version)
+    return StructType(
+        [
+            StructField(mapping.get(f.name, f.name), f.dataType)
+            for f in schema.fields
+            if f.name not in skip
+        ]
+    )
+
+
+def _parquet_reader(spark: SparkSession, schema):
+    """``spark.read`` with the log's ``schema`` — no footer-inference
+    job — or, for a pre-schema table (``schema`` None), the mergeSchema
+    inference those tables still need."""
+    if schema is None:
+        return spark.read.option("mergeSchema", "true")
+    return spark.read.schema(schema)
 
 
 def _raw_file_read(
@@ -375,13 +396,17 @@ def _raw_file_read(
     path: str,
     files,
     *,
+    version: int,
     pb: list[str],
     fold: dict,
     meta: bool = False,
 ) -> DataFrame:
-    """mergeSchema parquet over table files with partition columns
-    restored — the ONE low-level file reader under ``_mapped_read``
-    and ``_provenance_view``. ``meta=True`` additionally exposes row
+    """Parquet over table files with partition columns restored — the
+    ONE low-level file reader under ``_mapped_read`` and
+    ``_provenance_view``. The file schema is the log's physical schema
+    at ``version`` (``_physical_schema``), so building the read opens
+    no footer and starts no job; only pre-schema tables fall back to
+    mergeSchema inference. ``meta=True`` additionally exposes row
     provenance as ``_txb`` (file basename) and ``_txpos`` (physical
     row index), selected scan-side so it survives any union below.
 
@@ -410,7 +435,8 @@ def _raw_file_read(
             "*",
         )
 
-    reader = spark.read.option("mergeSchema", "true")
+    schema = _physical_schema(path, version)
+    reader = _parquet_reader(spark, schema)
     if not pb:
         return _with_meta(
             reader.parquet(*[os.path.join(path, f) for f in files])
@@ -428,7 +454,7 @@ def _raw_file_read(
     parts: list[DataFrame] = []
     for key, fs in sorted(groups.items(), key=repr):
         g = (
-            spark.read.option("mergeSchema", "true")
+            _parquet_reader(spark, schema)
             # disables partition inference: two roots' directory
             # structures must not be reconciled by path heuristics
             .option("recursiveFileLookup", "true")
@@ -452,6 +478,9 @@ def _raw_file_read(
 # verdict, What's wrong #3). ~16 bytes/row → ≤ ~64 MB build side.
 _DV_BROADCAST_ROWS = 4_000_000
 
+# every deletion-vector file (``_stage_dv``) holds exactly these columns
+_DV_SCHEMA = "file string, pos long"
+
 
 def _dv_dead_side(spark: SparkSession, path: str, dvmap: dict) -> DataFrame:
     """The (basename, pos) dead-row frame of the files in ``dvmap``
@@ -459,7 +488,7 @@ def _dv_dead_side(spark: SparkSession, path: str, dvmap: dict) -> DataFrame:
     broadcast-pinned when the manifests' dead-row counts say it is
     small (they are exact: every descriptor carries ``n``)."""
     dv_names = sorted({n for d in dvmap.values() for n in d["files"]})
-    dead = spark.read.parquet(
+    dead = spark.read.schema(_DV_SCHEMA).parquet(
         *[os.path.join(path, n) for n in dv_names]
     ).select(
         F.element_at(F.split(F.col("file"), "/"), -1).alias("_txb"),
@@ -474,10 +503,11 @@ def _mapped_read(
     spark: SparkSession, path: str, files, *, version: int | None,
     mask: bool = True,
 ) -> DataFrame:
-    """The one way engine code reads table files: mergeSchema parquet
-    over PHYSICAL names, then the logical view per the schema+mapping
-    at ``version``. Identity (and zero extra plan nodes) for unmapped
-    tables.
+    """The one way engine code reads table files: parquet over
+    PHYSICAL names with the schema the log records at ``version``
+    (no footer inference; columns a file lacks read as NULL), then
+    the logical view per the schema+mapping at ``version``. Identity
+    (and zero extra plan nodes) for unmapped tables.
 
     Partitioned tables read with ``basePath`` so Spark restores the
     partition columns from the Hive-style directory names (the files
@@ -506,11 +536,14 @@ def _mapped_read(
         else {}
     )
     if not dvmap:
-        df = _raw_file_read(spark, path, files, pb=pb, fold=fold)
+        df = _raw_file_read(
+            spark, path, files, version=version, pb=pb, fold=fold
+        )
     else:
         plain = [f for f in files if f not in dvmap]
         masked = _raw_file_read(
-            spark, path, sorted(dvmap), pb=pb, fold=fold, meta=True
+            spark, path, sorted(dvmap), version=version, pb=pb, fold=fold,
+            meta=True,
         )
         masked = masked.join(
             _dv_dead_side(spark, path, dvmap), ["_txb", "_txpos"],
@@ -518,40 +551,31 @@ def _mapped_read(
         ).drop("_txb", "_txpos")
         if plain:
             df = _raw_file_read(
-                spark, path, plain, pb=pb, fold=fold
+                spark, path, plain, version=version, pb=pb, fold=fold
             ).unionByName(masked, allowMissingColumns=True)
         else:
             df = masked
-    state = _mapping_state(path, version=version)
-    if state["map"] or state["dropped"]:
-        # a DROP leaves an empty map but live tombstones — the logical
-        # projection must still hide the dropped physical column
-        df = _apply_mapping(df, _latest_schema(path, version), state["map"])
-    elif pb:
-        # schema-ordered logical view (partition cols come last in the
-        # raw read; null-pad is a no-op here — every declared column
-        # is present via file bytes or directory values)
-        df = _apply_mapping(df, _latest_schema(path, version), {})
-    else:
-        # never column-mapped: raw read, zero extra plan nodes (and
-        # the historical union-of-file-schemas semantics preserved)
+    mapping = _mapping_state(path, version=version)["map"]
+    if not mapping and not pb:
+        # the log's physical schema IS the logical view (a dropped
+        # column's tombstoned physical is not in it): zero extra nodes
         return df
-    if pb:
-        # Spark TYPE-INFERS directory values (string '7' reads back as
-        # int) — cast partition columns to their DECLARED types so the
-        # logical view is exact (observed: a string partition column
-        # of digit values silently came back int and broke schema
-        # enforcement on the next rewrite)
-        schema = _latest_schema(path, version)
-        df = df.select(
-            *[
-                F.col(f.name).cast(f.dataType).alias(f.name)
+    # physical → logical names, partition columns (read last, from the
+    # directory names) back in schema order and cast to their DECLARED
+    # types: Spark TYPE-INFERS directory values (string '7' reads back
+    # as int; observed: a string partition column of digit values
+    # silently came back int and broke schema enforcement on the next
+    # rewrite)
+    return df.select(
+        *[
+            (
+                F.col(f.name).cast(f.dataType)
                 if f.name in pb
-                else F.col(f.name)
-                for f in schema.fields
-            ]
-        )
-    return df
+                else F.col(mapping.get(f.name, f.name))
+            ).alias(f.name)
+            for f in _latest_schema(path, version).fields
+        ]
+    )
 
 
 def _require_writer(path: str) -> None:
@@ -997,29 +1021,37 @@ def _parse_partition_dir(rel_dir: str, schema) -> dict:
 
 
 _TS_CONF_LOCK = threading.Lock()
-_TS_CONF_STATE: dict[str, object] = {"depth": 0, "prev": None}
+# session uuid → [depth, the session's value before the first hold]
+_TS_CONF_HOLDS: dict[str, list] = {}
 
 
 @contextlib.contextmanager
 def _ts_conf_micros(sess):
     """Hold ``spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS``
-    for the duration, reentrantly and thread-safely: the first holder
-    records the session's prior value, the last one restores it —
-    concurrent stagers (guide §2.6 overlapped builds) all want the
-    same value, so sharing one depth-counted hold is exact."""
+    on ``sess`` for the duration, reentrantly and thread-safely: the
+    session's first holder records its prior value, its last one
+    restores it — concurrent stagers on one session (overlapped builds
+    and writes) all want the same value, so one depth-counted hold per
+    session is exact. Holds are keyed by session: sessions from
+    ``newSession()`` share the process but not their SQL confs, so one
+    session's hold must neither stand in for another's nor restore its
+    value into it."""
     key = "spark.sql.parquet.outputTimestampType"
+    sid = sess._jsparkSession.sessionUUID()
     with _TS_CONF_LOCK:
-        if _TS_CONF_STATE["depth"] == 0:
-            _TS_CONF_STATE["prev"] = sess.conf.get(key)
+        hold = _TS_CONF_HOLDS.get(sid)
+        if hold is None:
+            hold = _TS_CONF_HOLDS[sid] = [0, sess.conf.get(key)]
             sess.conf.set(key, "TIMESTAMP_MICROS")
-        _TS_CONF_STATE["depth"] += 1
+        hold[0] += 1
     try:
         yield
     finally:
         with _TS_CONF_LOCK:
-            _TS_CONF_STATE["depth"] -= 1
-            if _TS_CONF_STATE["depth"] == 0:
-                sess.conf.set(key, _TS_CONF_STATE["prev"])
+            hold[0] -= 1
+            if hold[0] == 0:
+                del _TS_CONF_HOLDS[sid]
+                sess.conf.set(key, hold[1])
 
 
 def _stage_data(
@@ -1068,9 +1100,10 @@ def _stage_data(
     # timestamp columns would silently never prune. Write table data
     # as TIMESTAMP_MICROS, the modern encoding every table format
     # uses, and restore the session's choice after. The set/restore is
-    # depth-counted under a lock (round 15): independent table builds
-    # may stage CONCURRENTLY (guide §2.6 — x54 overlaps its two clone
-    # legs), and a naive get/set/restore pair interleaved across
+    # depth-counted per session under a lock: independent table builds
+    # and a DML's own writes may stage CONCURRENTLY (x54 overlaps its
+    # two clone legs; merge and copy-on-write delete overlap their
+    # writes), and a naive get/set/restore pair interleaved across
     # threads could restore a stale value into the session.
     with _ts_conf_micros(sess):
         writer = df.write.mode("overwrite")
@@ -1730,8 +1763,11 @@ def read_table(
     """Snapshot read at ``version`` (latest if None; or Delta-style
     ``timestamp`` AS-OF — the newest commit at-or-before it): the
     live file set resolved from the log, read as one parquet scan.
-    ``mergeSchema`` composes schema evolution across commits exactly
-    as sources/partitioned.py's x33 does for raw layouts.
+    The scan's schema is the manifest schema at that version, so
+    building the frame starts no job, and schema evolution composes
+    across commits: files that predate a column read it as NULL,
+    whichever files a predicate prunes (only tables whose manifests
+    predate the schema field fall back to mergeSchema inference).
 
     ``where`` — a predicate, as SQL text or a Column, exactly what
     ``.filter()`` accepts — is the ONE-STATEMENT skipping API (round
@@ -1802,17 +1838,14 @@ def _provenance_view(
     schema = _latest_schema(path, version)
     state = _mapping_state(path, version=version)
     raw = _raw_file_read(
-        spark, path, sorted(files), pb=pb, fold=fold, meta=True
+        spark, path, sorted(files), version=version, pb=pb, fold=fold,
+        meta=True,
     )
     if schema is not None:
+        # the read used the log's physical schema: every column is there
         sel = [F.col("_txb"), F.col("_txpos")]
         for fld in schema.fields:
-            phys = state["map"].get(fld.name, fld.name)
-            col = (
-                F.col(phys)
-                if phys in raw.columns
-                else F.lit(None).cast(fld.dataType)
-            )
+            col = F.col(state["map"].get(fld.name, fld.name))
             if fld.name in pb:
                 col = col.cast(fld.dataType)
             sel.append(col.alias(fld.name))
@@ -1876,18 +1909,19 @@ def delete_where(
     return commit(spark, path, condition)
 
 
-def _touched_files(matched: DataFrame, snapshot) -> list[str]:
-    """Manifest names of the ``snapshot`` files holding a row of
-    ``matched`` (a filtered or joined provenance view). Basenames are
-    uuid-unique, so the manifest-relative path (which may carry
-    partition directories) resolves from ``_txb`` driver-side."""
+def _touched_files(matched: DataFrame, snapshot) -> dict[str, int]:
+    """{manifest name: rows of ``matched``} for the ``snapshot`` files
+    holding a row of ``matched`` (a filtered or joined provenance
+    view). Basenames are uuid-unique, so the manifest-relative path
+    (which may carry partition directories) resolves from ``_txb``
+    driver-side."""
     rel_by_base = {os.path.basename(f): f for f in snapshot}
-    return [
-        rel_by_base[r["_txb"]]
-        for r in matched.select("_txb")
-        .distinct()
+    return {
+        rel_by_base[r["_txb"]]: r["count"]
+        for r in matched.groupBy("_txb")
+        .count()
         .collect()  # bounded: one row per TOUCHED FILE (metadata-plane)
-    ]
+    }
 
 
 def _assigned(rows: DataFrame, assignments: dict) -> DataFrame:
@@ -1911,25 +1945,29 @@ def _cow_commit(
     """The copy-on-write commit shared by ``delete_where(mode="cow")``
     (``assignments=None``) and ``update_where(mode="cow")`` — the twin
     of ``_dv_commit``. Per attempt: one provenance scan over the
-    snapshot finds the files holding a matched row (matched rows are
-    LIVE rows only: the view masks deletion vectors); ONE checkpointed
-    scan of those files then feeds both their rewrite and the change-
-    data preimage (guide §1.2: without the checkpoint each write job
-    re-scans the touched set). A DELETE keeps the rows where the
-    predicate is not TRUE; an UPDATE applies the assignments where it
-    is TRUE and validates the rewrite against CHECK constraints.
+    snapshot counts the matched rows per file (matched rows are LIVE
+    rows only: the view masks deletion vectors); ONE checkpointed
+    scan of the touched files then feeds both their rewrite and the
+    change-data preimage (guide §1.2: without the checkpoint each
+    write job re-scans the touched set). A DELETE keeps the rows
+    where the predicate is not TRUE; an UPDATE applies the
+    assignments where it is TRUE and validates the rewrite against
+    CHECK constraints. The counts against the manifest's live row
+    counts say before any write whether a DELETE leaves survivors,
+    so the rewrite and the change-file write run side by side.
     Untouched files carry by reference."""
-    from ..operators.util import truncate_lineage
+    from ..operators.util import side_by_side, truncate_lineage
 
     _require_writer(path)
     op = "delete" if assignments is None else "update"
 
     def plan(base: int):
         snapshot = live_files(path, version=base)
-        touched = _touched_files(
+        hits = _touched_files(
             _provenance_view(spark, path, snapshot, base).filter(condition),
             snapshot,
         )
+        touched = sorted(hits)
         actions: list[dict] = [{"remove": f} for f in touched]
         staged: list[tuple] = []
         cdf_files: list[dict] | None = []
@@ -1947,6 +1985,34 @@ def _cow_commit(
                 # round 7: a NULL-tag row sharing a file with a matched
                 # row vanished)
                 out = src.filter(~F.coalesce(condition, F.lit(False)))
+                # a touched file keeps a row unless every live row
+                # matched: manifest row counts are exact LIVE counts
+                # (a DV'd file's already exclude its dead rows); -1 =
+                # a legacy manifest without counts, assumed to survive
+                survives = any(
+                    snapshot[f] < 0 or hits[f] < snapshot[f]
+                    for f in touched
+                )
+                fold = _fold_live(path, base)
+                if survives or any("dv" in fold[f] for f in touched):
+                    # commit-time CDF change files (round-10 verdict
+                    # item 3): the deleted rows are exactly the touched
+                    # rows where the predicate IS TRUE — the keep-
+                    # filter's exact complement. Writing them now makes
+                    # every CDF read of this commit an ordinary file
+                    # scan instead of a read-time multiset diff. A
+                    # DV-masked touched file forces this path even when
+                    # nothing survives: a raw per-file delete scan
+                    # would resurrect its already-dead rows into the
+                    # feed.
+                    changes = (preimage, None)
+                else:
+                    # every touched row dies → a pure-remove commit:
+                    # the remove actions ARE the exact change set (CDF
+                    # readers scan the removed files as per-file delete
+                    # partitions); change files would duplicate whole
+                    # files for nothing
+                    changes = None
             else:
                 # when() fires only where condition IS TRUE: NULL rows
                 # keep their preimage (3VL) — and one select evaluates
@@ -1961,7 +2027,21 @@ def _cow_commit(
                         for c in src.columns
                     ]
                 )
-            staged = _stage_data(out, path, partition_by=pb or None)
+                survives = True
+                changes = (preimage, _assigned(preimage, assignments))
+            # both are decided before staging, so the rewrite and the
+            # change-file write run side by side
+            def rewrite() -> list[tuple]:
+                if not survives:
+                    return []
+                return _stage_data(out, path, partition_by=pb or None)
+
+            def change_files() -> list[dict] | None:
+                if changes is None:
+                    return None
+                return _stage_change_data(*changes, path)
+
+            staged, cdf_files = side_by_side(rewrite, change_files)
             actions += _add_actions(staged)
             if assignments is not None:
                 from .constraints import table_constraints, validate_staged
@@ -1970,29 +2050,6 @@ def _cow_commit(
                     spark, path, [f for f, *_ in staged],
                     table_constraints(path, version=base),
                 )
-                cdf_files = _stage_change_data(
-                    preimage, _assigned(preimage, assignments), path
-                )
-            elif staged or any(
-                "dv" in _fold_live(path, base).get(f, {}) for f in touched
-            ):
-                # commit-time CDF change files (round-10 verdict item
-                # 3): the deleted rows are exactly the touched rows
-                # where the predicate IS TRUE — the keep-filter's exact
-                # complement. Writing them now makes every CDF read of
-                # this commit an ordinary file scan instead of a
-                # read-time multiset diff. A DV-masked touched file
-                # forces this path even when no survivors staged: a
-                # raw per-file delete scan would resurrect its already
-                # -dead rows into the feed.
-                cdf_files = _stage_change_data(preimage, None, path)
-            else:
-                # every touched row dies → a pure-remove commit: the
-                # remove actions ARE the exact change set (CDF readers
-                # scan the removed files as per-file delete
-                # partitions); change files would duplicate whole
-                # files for nothing
-                cdf_files = None
         metrics = {
             "op": op,
             "files_removed": len(touched),
@@ -2116,7 +2173,7 @@ def _dv_mask_actions(
     if carried_names:
         touched_bases = [os.path.basename(f) for f in touched]
         prior = (
-            spark.read.parquet(
+            spark.read.schema(_DV_SCHEMA).parquet(
                 *[os.path.join(path, n) for n in carried_names]
             )
             .filter(
@@ -2551,7 +2608,7 @@ def merge_upsert(
         prov = _provenance_view(spark, path, snapshot, base).select(
             *key_cols, F.col("_txb")
         )
-        touched = _touched_files(prov.join(keys, key_cols), snapshot)
+        touched = list(_touched_files(prov.join(keys, key_cols), snapshot))
         actions: list[dict] = [{"remove": f} for f in touched]
         # stage + validate the UPDATE side FIRST: survivors are
         # pre-existing rows and cannot violate a recorded constraint,
@@ -2699,7 +2756,10 @@ def merge_into(
     contract shared with merge_upsert); files without an applied row
     never rewrite — every staging pass re-classifies only the touched
     files — and the insert anti-join's build side is the distinct key
-    set."""
+    set. Independent jobs run side by side: the source-key uniqueness
+    check beside that classifying scan (both finish before anything
+    stages), and in ``mode="cow"`` the change files beside the
+    survivor and insert writes (all finish before validation)."""
     from pyspark.sql.types import StructType
 
     if mode not in ("cow", "dv"):
@@ -2726,21 +2786,22 @@ def merge_into(
         )
     from functools import reduce
 
+    from ..operators.util import side_by_side
+
     # one-source-row-per-key guard over the NON-NULL key rows (null
     # keys never match, so duplicates there are plain multi-inserts)
     nonnull = reduce(
         lambda a, b: a & b, [F.col(k).isNotNull() for k in on]
     )
-    r = source.agg(
+    key_counts = source.agg(
         F.count(F.when(nonnull, 1)).alias("n"),
         F.count_distinct(*[F.col(k) for k in on]).alias("d"),
-    ).collect()[0]
-    if int(r["n"]) != int(r["d"]):
-        raise ValueError(
-            "MERGE source has multiple rows per key — which one "
-            "updates the matched target row is ambiguous; distinct "
-            "the source on the key columns first"
-        )
+    )
+
+    def keys_unique() -> bool:
+        r = key_counts.collect()[0]
+        return int(r["n"]) == int(r["d"])
+
     update_idx = [
         i for i, cl in enumerate(norm)
         if cl["when"] != "not_matched" and cl["action"] == "update"
@@ -2777,7 +2838,7 @@ def merge_into(
         # evolve_schema (Delta's autoMerge): new SOURCE columns extend
         # the OUTPUT schema; existing rows null-fill (the supported
         # column-ADDITION evolution — the commit's union-schema stamp
-        # and mergeSchema reads carry the rest)
+        # and reads with the log's schema carry the rest)
         out_fields = list(schema.fields)
         if evolve_schema:
             out_fields += [
@@ -2847,39 +2908,41 @@ def merge_into(
             )
             return joined.withColumn("_txap", applied)
 
-        if snapshot:
-            rel_by_base = {os.path.basename(f): f for f in snapshot}
-            # ONE full provenance scan discovers the touched files and
-            # per-clause row counts — bounded collect: one row per
-            # (file, applied clause) pair
-            full = _classify(snapshot)
-            hit = (
-                full.filter(F.col("_txap") != -1)
+        def discover() -> list:
+            """ONE full provenance scan finds the touched files and
+            per-clause row counts — bounded collect: one row per
+            (file, applied clause) pair. An empty live set has none:
+            everything in the source is unmatched."""
+            if not snapshot:
+                return []
+            return (
+                _classify(snapshot)
+                .filter(F.col("_txap") != -1)
                 .groupBy("_txb", "_txap")
                 .agg(F.count(F.lit(1)).alias("n"))
                 .collect()
             )
-            touched = sorted({rel_by_base[h["_txb"]] for h in hit})
-            clause_rows = {}
-            for h in hit:
-                clause_rows[h["_txap"]] = (
-                    clause_rows.get(h["_txap"], 0) + h["n"]
-                )
-            # every later pass (survivors, preimage/postimage, DV
-            # positions) re-classifies ONLY the touched files — a
-            # row-level _txb filter on the full frame could never
-            # prune at the file level, so it would re-scan the whole
-            # table per staging pass
-            classified = _classify(touched) if touched else None
-            tkeys = _provenance_view(
-                spark, path, snapshot, base
-            ).select(*[F.col(k) for k in on]).distinct()
-        else:  # empty live set: everything in the source is unmatched
-            classified = None
-            touched, clause_rows = [], {}
-            tkeys = spark.createDataFrame(
-                [], StructType([schema[k] for k in on])
+
+        # the source-key guard runs beside discovery, and both finish
+        # before anything is staged
+        hit, unique = side_by_side(discover, keys_unique)
+        if not unique:
+            raise ValueError(
+                "MERGE source has multiple rows per key — which one "
+                "updates the matched target row is ambiguous; distinct "
+                "the source on the key columns first"
             )
+        rel_by_base = {os.path.basename(f): f for f in snapshot}
+        touched = sorted({rel_by_base[h["_txb"]] for h in hit})
+        clause_rows = {}
+        for h in hit:
+            clause_rows[h["_txap"]] = clause_rows.get(h["_txap"], 0) + h["n"]
+        # every later pass (survivors, preimage/postimage, DV
+        # positions) re-classifies ONLY the touched files — a
+        # row-level _txb filter on the full frame could never prune at
+        # the file level, so it would re-scan the whole table per
+        # staging pass
+        classified = _classify(touched) if touched else None
 
         def _applied_val(c: str):
             """Post-clause value of column ``c``: the first applied
@@ -2923,7 +2986,13 @@ def merge_into(
         # --- unmatched source rows → INSERT clauses ------------------
         inserts = None
         if insert_idx:
-            sview = source.join(tkeys, on, "left_anti").select(
+            sview = source
+            if snapshot:
+                tkeys = _provenance_view(
+                    spark, path, snapshot, base
+                ).select(*[F.col(k) for k in on]).distinct()
+                sview = source.join(tkeys, on, "left_anti")
+            sview = sview.select(
                 F.lit(None).cast(StructType(schema.fields)).alias("t"),
                 F.struct(*[F.col(c) for c in scols]).alias("s"),
             )
@@ -2979,6 +3048,7 @@ def merge_into(
         staged_new: list[tuple] = []
         if mode == "cow":
             actions += [{"remove": f} for f in touched]
+            writes = [lambda: _stage_change_data(preimage, post_and_ins, path)]
             if touched:
                 # classified covers exactly the touched files
                 survivors = classified.filter(
@@ -2986,13 +3056,17 @@ def merge_into(
                     if delete_idx
                     else F.lit(True)
                 ).select(*new_vals)
-                staged_new += _stage_data(
-                    survivors, path, partition_by=pb or None
+                writes.append(
+                    lambda: _stage_data(survivors, path, partition_by=pb or None)
                 )
             if inserts is not None:
-                staged_new += _stage_data(
-                    inserts, path, partition_by=pb or None
+                writes.append(
+                    lambda: _stage_data(inserts, path, partition_by=pb or None)
                 )
+            # the change files, survivors and inserts are independent
+            # writes: side by side, all finished before validation
+            cdf_files, *parts = side_by_side(*writes)
+            staged_new = [entry for part in parts for entry in part]
             validate_staged(
                 spark, path, [f for f, *_ in staged_new],
                 table_constraints(path, version=base),
@@ -3022,8 +3096,7 @@ def merge_into(
                 )
                 actions += _add_actions(staged_new)
             files_masked = len(touched)
-
-        cdf_files = _stage_change_data(preimage, post_and_ins, path)
+            cdf_files = _stage_change_data(preimage, post_and_ins, path)
         rows_updated = sum(clause_rows.get(i, 0) for i in update_idx)
         rows_deleted = sum(clause_rows.get(i, 0) for i in delete_idx)
         n_staged_rows = sum(n for _, n, *_ in staged_new)
@@ -3212,8 +3285,9 @@ def change_feed(
 
     Commits that stamped COMMIT-TIME CHANGE FILES (every delete/merge
     from round 11 on — Delta's ``_change_data``) read as an ordinary
-    scan of those files; a stamped EMPTY set (OPTIMIZE) skips the
-    commit outright. Legacy commits without the stamp derive changes
+    scan of those files, with ``_change`` plus the table's physical
+    schema at ``to_version`` from the log (no inference job); a
+    stamped EMPTY set (OPTIMIZE) skips the commit outright. Legacy commits without the stamp derive changes
     from the log's file diff: per commit, ``inserts = rows(added
     files) exceptAll rows(removed files)`` and ``deletes =
     rows(removed) exceptAll rows(added)`` — multiset difference, so
@@ -3231,6 +3305,8 @@ def change_feed(
     ``committed_versions`` and feed from their last seen version —
     the streaming-source pattern (tests/test_txlog_stream.py drives
     it)."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
     _require_reader(path)
     to_version, versions = _resolve_version(path, to_version)
     if from_version not in versions:
@@ -3249,7 +3325,14 @@ def change_feed(
             names = [e["name"] for e in manifest["cdf"]["files"]]
             if not names:
                 continue
-            raw = spark.read.option("mergeSchema", "true").parquet(
+            # change files hold `_change` plus the physical columns
+            # (partition columns included), read with the log's schema
+            phys = _physical_schema(path, to_version, partitions=True)
+            if phys is not None:
+                phys = StructType(
+                    [StructField("_change", StringType()), *phys.fields]
+                )
+            raw = _parquet_reader(spark, phys).parquet(
                 *[os.path.join(path, n) for n in names]
             )
             schema = _latest_schema(path, to_version)
@@ -3259,13 +3342,8 @@ def change_feed(
                 F.col("_change"),
             ]
             for fld in (schema.fields if schema is not None else []):
-                phys = mapping.get(fld.name, fld.name)
                 sel.append(
-                    (
-                        F.col(phys)
-                        if phys in raw.columns
-                        else F.lit(None).cast(fld.dataType)
-                    ).alias(fld.name)
+                    F.col(mapping.get(fld.name, fld.name)).alias(fld.name)
                 )
             tagged = raw.select(*sel)
             out = (

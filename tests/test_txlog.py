@@ -886,3 +886,408 @@ class TestCommitLoop:
                 and uses(fn)
             ]
         assert offenders == []
+
+
+# ---------------------------------------------------------------------------
+# Schemas from the log: reads take the manifest's physical schema instead
+# of inferring one from parquet footers (one job per read)
+# ---------------------------------------------------------------------------
+
+
+def _jobs_started_by(spark, build) -> int:
+    """Spark jobs started while ``build()`` runs, as the ids above the
+    prior high-water mark (the status tracker evicts old ids, so list
+    lengths are no measure). The listener bus is drained first so a
+    job that ran is counted."""
+    for q in spark.streams.active:
+        q.stop()
+    sc = spark.sparkContext._jsc.sc()
+    tracker = spark.sparkContext.statusTracker()
+    sc.listenerBus().waitUntilEmpty()
+    ids = tracker.getJobIdsForGroup(None)
+    high = max(ids) if ids else -1
+    build()
+    sc.listenerBus().waitUntilEmpty()
+    return sum(1 for j in tracker.getJobIdsForGroup(None) if j > high)
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _names_types(df):
+    return [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+
+
+def _files_under(path):
+    return sorted(
+        os.path.relpath(os.path.join(d, f), path)
+        for d, _, fs in os.walk(path)
+        for f in fs
+    )
+
+
+class TestSchemaFromLog:
+    def _dml_history(self, spark, table):
+        """v0 two files, v1 merge (cow), v2 whole-file delete (a
+        remove-only commit, read back through the derived diff), v3
+        partial delete (cow, change files), v4 DV delete."""
+        txlog.create_table(_kv(spark, 0, 10, parts=2), table)
+        txlog.merge_into(
+            spark, table, _src(spark), ["k"], clauses=_UPSERT_CLAUSES
+        )
+        txlog.delete_where(spark, table, (F.col("k") >= 5) & (F.col("k") < 10))
+        txlog.delete_where(spark, table, F.col("k") == 0)
+        txlog.delete_where(spark, table, F.col("k") == 3, mode="dv")
+
+    def test_building_reads_starts_no_job(self, spark, table):
+        self._dml_history(spark, table)
+        head = txlog.committed_versions(table)[-1]
+        assert txlog.commit_metrics(table, 2)["files_added"] == 0
+        builders = {
+            "read_table": lambda: txlog.read_table(spark, table),
+            "read_table_where": lambda: txlog.read_table(
+                spark, table, where="k > 2"
+            ),
+            "read_table_version": lambda: txlog.read_table(
+                spark, table, version=1
+            ),
+            "change_feed": lambda: txlog.change_feed(
+                spark, table, from_version=0
+            ),
+            "provenance_view": lambda: txlog._provenance_view(
+                spark, table, txlog.live_files(table), head, with_pos=True
+            ),
+        }
+        started = {
+            name: _jobs_started_by(spark, build)
+            for name, build in builders.items()
+        }
+        assert started == {name: 0 for name in builders}
+        # and the frames are right
+        assert _rows(txlog.read_table(spark, table)) == [
+            (1, 100), (2, 20), (4, 40), (20, 200),
+        ]
+        feed = txlog.change_feed(spark, table, from_version=0)
+        assert feed.columns == ["_version", "_change", "k", "v"]
+        assert sorted(
+            (r["_version"], r["_change"], r["k"]) for r in feed.collect()
+        ) == sorted(
+            [(1, "delete", 1), (1, "insert", 1), (1, "insert", 20)]
+            + [(2, "delete", k) for k in range(5, 10)]
+            + [(3, "delete", 0), (4, "delete", 3)]
+        )
+
+    def test_added_column_null_fills_old_files(self, spark, table):
+        txlog.create_table(_kv(spark, 0, 3), table)
+        txlog.append(
+            spark.createDataFrame([(7, 70, "x")], "k long, v long, w string"),
+            table,
+        )
+        df = txlog.read_table(spark, table)
+        assert _names_types(df) == [
+            ("k", "bigint"), ("v", "bigint"), ("w", "string"),
+        ]
+        assert _rows(df) == [
+            (0, 0, None), (1, 10, None), (2, 20, None), (7, 70, "x"),
+        ]
+        # a where-pruned read keeps the same columns
+        assert _rows(txlog.read_table(spark, table, where="k < 1")) == [
+            (0, 0, None)
+        ]
+        # time travel reads the schema of its own version
+        assert _names_types(txlog.read_table(spark, table, version=0)) == [
+            ("k", "bigint"), ("v", "bigint"),
+        ]
+
+    def test_rename_then_drop_keeps_tombstone_hidden(self, spark, table):
+        txlog.create_table(
+            spark.createDataFrame(
+                [(1, 10, "a"), (2, 20, "b")], "k long, v long, w string"
+            ),
+            table,
+        )
+        txlog.rename_column(spark, table, "v", "x")
+        txlog.drop_column(spark, table, "w")
+        txlog.append(
+            spark.createDataFrame([(3, 30)], "k long, x long"), table
+        )
+        df = txlog.read_table(spark, table)
+        assert _names_types(df) == [("k", "bigint"), ("x", "bigint")]
+        assert _rows(df) == [(1, 10), (2, 20), (3, 30)]
+        head = txlog.committed_versions(table)[-1]
+        prov = txlog._provenance_view(
+            spark, table, txlog.live_files(table), head
+        )
+        assert prov.columns == ["_txb", "k", "x"]
+        # before the drop the column is still there, under its new name
+        assert _rows(txlog.read_table(spark, table, version=1)) == [
+            (1, 10, "a"), (2, 20, "b"),
+        ]
+        # a CoW rewrite after the DDL round-trips through the mapping
+        txlog.delete_where(spark, table, F.col("x") == 20)
+        assert _rows(txlog.read_table(spark, table)) == [(1, 10), (3, 30)]
+
+    def test_partitioned_table_and_its_shallow_clone(self, spark, tmp_path):
+        src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+        frame = spark.createDataFrame(
+            [(i, str(i % 3), i * 1.5) for i in range(9)],
+            "k long, p string, x double",
+        ).coalesce(1)  # one file per partition value
+        expected = sorted((i, str(i % 3), i * 1.5) for i in range(9))
+        txlog.create_table(frame, src, partition_by="p")
+        df = txlog.read_table(spark, src)
+        # digit-valued directory names stay the declared string type
+        assert _names_types(df) == [
+            ("k", "bigint"), ("p", "string"), ("x", "double"),
+        ]
+        assert _rows(df) == expected
+        txlog.shallow_clone(spark, src, dst)
+        assert _names_types(txlog.read_table(spark, dst)) == _names_types(df)
+        assert _rows(txlog.read_table(spark, dst)) == expected
+        # clone DML: its live set mixes absolute source references
+        # with restaged clone-relative files
+        txlog.delete_where(spark, dst, F.col("k") == 4)
+        live = txlog.live_files(dst)
+        assert any(os.path.isabs(f) for f in live)
+        assert any(not os.path.isabs(f) for f in live)
+        clone = txlog.read_table(spark, dst)
+        assert _names_types(clone) == _names_types(df)
+        assert _rows(clone) == [r for r in expected if r[0] != 4]
+        assert _rows(txlog.read_table(spark, dst, where="p = '1'")) == [
+            r for r in expected if r[1] == "1" and r[0] != 4
+        ]
+
+    def test_dv_masked_table(self, spark, table):
+        txlog.create_table(_kv(spark, 0, 10), table)
+        txlog.delete_where(spark, table, F.col("k") % 3 == 0, mode="dv")
+        df = txlog.read_table(spark, table)
+        assert _names_types(df) == [("k", "bigint"), ("v", "bigint")]
+        assert _rows(df) == [(k, k * 10) for k in range(10) if k % 3]
+        # a second DV delete carries the first vector forward
+        txlog.delete_where(spark, table, F.col("k") == 1, mode="dv")
+        assert _rows(txlog.read_table(spark, table)) == [
+            (k, k * 10) for k in range(2, 10) if k % 3
+        ]
+
+    def test_change_feed_across_schema_evolution(self, spark, table):
+        txlog.create_table(_kv(spark, 0, 4), table)
+        txlog.delete_where(spark, table, F.col("k") == 1)
+        txlog.append(
+            spark.createDataFrame([(9, 90, "n")], "k long, v long, w string"),
+            table,
+        )
+        txlog.merge_into(
+            spark, table,
+            spark.createDataFrame([(2, "u")], "k long, w string"), ["k"],
+            clauses=[{"when": "matched", "action": "update",
+                      "set": {"w": "s.w"}}],
+        )
+        feed = txlog.change_feed(spark, table, from_version=0)
+        assert _names_types(feed) == [
+            ("_version", "bigint"), ("_change", "string"),
+            ("k", "bigint"), ("v", "bigint"), ("w", "string"),
+        ]
+        assert _rows(feed) == sorted([
+            (1, "delete", 1, 10, None),
+            (2, "insert", 9, 90, "n"),
+            (3, "delete", 2, 20, None),
+            (3, "insert", 2, 20, "u"),
+        ])
+        # bounded before the evolution: the narrower schema of that version
+        assert txlog.change_feed(
+            spark, table, from_version=0, to_version=1
+        ).columns == ["_version", "_change", "k", "v"]
+
+    def test_pre_schema_table_reads_through_inference(self, spark, table):
+        txlog.create_table(_kv(spark, 0, 4), table)
+        txlog.append(
+            spark.createDataFrame([(9, 90, "n")], "k long, v long, w string"),
+            table,
+        )
+        for v in txlog.committed_versions(table):
+            mp = os.path.join(txlog._log_path(table), f"{v:08d}.json")
+            with open(mp) as f:
+                m = json.load(f)
+            m.pop("schema")
+            with open(mp, "w") as f:
+                json.dump(m, f)
+        assert txlog._physical_schema(table, 1) is None
+        df = txlog.read_table(spark, table)
+        assert sorted(df.columns) == ["k", "v", "w"]
+        assert sorted(
+            (r["k"], r["v"], r["w"]) for r in df.collect()
+        ) == [(0, 0, None), (1, 10, None), (2, 20, None), (3, 30, None),
+              (9, 90, "n")]
+        txlog.delete_where(spark, table, F.col("k") == 2)
+        assert txlog.table_count(table) == 4
+        assert sorted(
+            r["k"] for r in txlog.read_table(spark, table).collect()
+        ) == [0, 1, 3, 9]
+
+
+# ---------------------------------------------------------------------------
+# Independent writes side by side: ordering guarantees
+# ---------------------------------------------------------------------------
+
+
+class TestOverlappedWrites:
+    def test_side_by_side_waits_for_every_thunk(self):
+        import time
+
+        from onechronos_etl_takehome_spark.operators.util import side_by_side
+
+        finished = []
+
+        def slow(tag):
+            time.sleep(0.3)
+            finished.append(tag)
+            return tag
+
+        def fail(msg):
+            raise RuntimeError(msg)
+
+        assert side_by_side(lambda: slow("a"), lambda: "b") == ["a", "b"]
+        with pytest.raises(RuntimeError, match="first"):
+            side_by_side(
+                lambda: fail("first"),
+                lambda: slow("late"),
+                lambda: fail("second"),
+            )
+        # the slow sibling finished before the error surfaced
+        assert finished == ["a", "late"]
+
+    def test_duplicate_merge_keys_raise_before_staging(self, spark, table):
+        txlog.create_table(_kv(spark, 0, 10), table)
+        before = _files_under(table)
+        dup = spark.createDataFrame([(1, 1), (1, 2)], "k long, v long")
+        with pytest.raises(ValueError, match="multiple rows per key"):
+            txlog.merge_into(
+                spark, table, dup, ["k"], clauses=_UPSERT_CLAUSES
+            )
+        assert _files_under(table) == before  # no file, no manifest
+
+    def test_check_violation_in_overlapped_merge_commits_nothing(
+        self, spark, table
+    ):
+        txlog.create_table(_kv(spark, 0, 10, parts=2), table)
+        C.add_constraint(spark, table, "v_nonneg", "v >= 0")
+        head = txlog.committed_versions(table)[-1]
+        src = spark.createDataFrame([(1, -5), (30, 300)], "k long, v long")
+        with pytest.raises(C.ConstraintViolation, match="v_nonneg"):
+            txlog.merge_into(
+                spark, table, src, ["k"], clauses=_UPSERT_CLAUSES
+            )
+        assert txlog.committed_versions(table)[-1] == head
+        # every write had finished: no staging directory is left, and
+        # the violating data files are unlinked
+        assert not [d for d in os.listdir(table) if d.startswith("_stage-")]
+        assert not [f for f in _files_under(table) if f.startswith("part-")
+                    and f not in txlog.live_files(table)]
+        assert _rows(txlog.read_table(spark, table)) == _BASE_ROWS
+
+    def _manifest(self, table, v):
+        with open(os.path.join(txlog._log_path(table), f"{v:08d}.json")) as f:
+            return json.load(f)
+
+    def test_delete_emptying_every_touched_file_is_remove_only(
+        self, spark, table
+    ):
+        txlog.create_table(_kv(spark, 0, 10, parts=2), table)
+        v = txlog.delete_where(spark, table, F.col("k") < 5)
+        m = self._manifest(table, v)
+        assert "cdf" not in m
+        assert [a for a in m["actions"] if "add" in a] == []
+        assert len(m["actions"]) == 1
+        assert not [f for f in _files_under(table) if f.startswith("change-")]
+        assert _rows(
+            txlog.change_feed(spark, table, from_version=0).select(
+                "_change", "k"
+            )
+        ) == [("delete", k) for k in range(5)]
+
+    def test_partial_and_dv_file_deletes_stage_change_files(
+        self, spark, table
+    ):
+        txlog.create_table(_kv(spark, 0, 10, parts=2), table)
+        # partial: survivors restage, the deleted rows are change files
+        v1 = txlog.delete_where(spark, table, F.col("k") == 2)
+        m1 = self._manifest(table, v1)
+        assert sum(e["rows"] for e in m1["cdf"]["files"]) == 1
+        # a DV-masked file whose every remaining row now dies: nothing
+        # survives, yet change files are staged (a per-file delete scan
+        # would resurrect the DV-dead row)
+        txlog.delete_where(spark, table, F.col("k") == 7, mode="dv")
+        v3 = txlog.delete_where(spark, table, F.col("k") >= 5)
+        m3 = self._manifest(table, v3)
+        assert [a for a in m3["actions"] if "add" in a] == []
+        assert sum(e["rows"] for e in m3["cdf"]["files"]) == 4
+        assert _rows(
+            txlog.change_feed(spark, table, from_version=0).select(
+                "_version", "_change", "k"
+            )
+        ) == sorted(
+            [(1, "delete", 2), (2, "delete", 7)]
+            + [(3, "delete", k) for k in (5, 6, 8, 9)]
+        )
+        assert _rows(txlog.read_table(spark, table)) == [
+            (k, k * 10) for k in (0, 1, 3, 4)
+        ]
+
+
+class TestTimestampConfPerSession:
+    def test_sessions_hold_and_restore_their_own_conf(self, spark, tmp_path):
+        import datetime
+        import pyarrow.parquet as pq
+
+        key = "spark.sql.parquet.outputTimestampType"
+        a, b = spark.newSession(), spark.newSession()
+        a.conf.set(key, "TIMESTAMP_MILLIS")
+        b.conf.set(key, "INT96")
+        frame = b.createDataFrame(
+            [(1, datetime.datetime(2024, 1, 2, 3, 4, 5))], "k long, t timestamp"
+        )
+        with txlog._ts_conf_micros(a):
+            staged = txlog._stage_data(frame, str(tmp_path))
+            assert a.conf.get(key) == "TIMESTAMP_MICROS"
+        (name, _rows_n, stats, *_), = staged
+        assert "t" in stats  # INT96 would carry no min/max
+        meta = pq.ParquetFile(os.path.join(tmp_path, name)).metadata
+        assert meta.schema.column(1).physical_type == "INT64"
+        assert a.conf.get(key) == "TIMESTAMP_MILLIS"
+        assert b.conf.get(key) == "INT96"
+
+    def test_holds_under_fast_thread_switching(self, spark):
+        import sys
+
+        key = "spark.sql.parquet.outputTimestampType"
+        sessions = [spark.newSession(), spark.newSession()]
+        for sess, prior in zip(sessions, ("INT96", "TIMESTAMP_MILLIS")):
+            sess.conf.set(key, prior)
+        seen_outside_hold: list[str] = []
+
+        def worker(sess) -> None:
+            for _ in range(20):
+                with txlog._ts_conf_micros(sess):
+                    got = sess.conf.get(key)
+                    if got != "TIMESTAMP_MICROS":
+                        seen_outside_hold.append(got)
+
+        prev = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            threads = [
+                threading.Thread(target=worker, args=(sessions[i % 2],))
+                for i in range(8)
+            ]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=120)
+        finally:
+            sys.setswitchinterval(prev)
+        assert not any(t.is_alive() for t in threads)
+        assert seen_outside_hold == []
+        assert txlog._TS_CONF_HOLDS == {}
+        assert sessions[0].conf.get(key) == "INT96"
+        assert sessions[1].conf.get(key) == "TIMESTAMP_MILLIS"
