@@ -1,7 +1,7 @@
 """Every oracled query must hash-match DuckDB — the t2 gate, locally.
 
-Runs at sf0.001 (fast) for all queries; mark `slow` runs sf0.01 too
-(what the driver actually uses).
+Runs every query at sf0.001 and, unless the environment sets
+``ORACLE_SF001=0``, at sf0.01 too (the scale the driver uses).
 """
 
 from __future__ import annotations

@@ -60,7 +60,7 @@ def test_no_cartesian_products_anywhere(spark):
         assert "CartesianProduct" not in plan, name
 
 
-def test_fills_broadcast_is_size_aware(spark):
+def test_fills_broadcast_is_size_aware(spark, recon_inputs):
     """The enrichment join must broadcast fills only below the size
     threshold — fills are fact-shaped and OOM executors at scale."""
     from onechronos_etl_takehome_spark.pipeline.etl import (
@@ -69,7 +69,7 @@ def test_fills_broadcast_is_size_aware(spark):
     )
 
     def plan_for(cfg):
-        pipe = ReconciliationPipeline(spark, cfg, input_dir="/root/reference")
+        pipe = ReconciliationPipeline(spark, cfg, input_dir=recon_inputs[0])
         validated = pipe.transform(*pipe.extract())
         # simple mode: each operator appears exactly once, so counts
         # below are join counts (formatted mode lists each twice)
