@@ -44,17 +44,19 @@ cds/<key>.jsa``, about 150 MB, keyed by the JDK's ``release`` file, the
 name, size and mtime of every jar in ``$SPARK_HOME/jars`` and the
 pyspark version. The first launch on a machine dumps the archive when
 its JVM exits (``<key>.<pid>.part``; the exit takes 10-20 s
-longer); a later launch checks that a JVM starts from it, publishes it
-and deletes archives of other keys. With it, ``get_spark`` plus the first
-job took about half as long on 4 cores. Delete the directory to drop
-the archive; the next launch dumps a new one. No archive is used, and
-the launch is a plain one, when the JVM is already running (the flags,
-like ``spark.driver.memory``, act only at launch), when the cache
-directory cannot be written, when ``SPARK_CONF_DIR`` (default
-``$SPARK_HOME/conf``) holds any file but ``*.template`` or another
-source adds to the driver's classpath, or while a dump of the same key
-is pending (its process is alive). The JVM refuses a class-data archive when
-a non-empty directory is on its classpath, so a conf directory that
+longer); a later launch checks that the dump is finished (its header
+carries the archive magic) and that a JVM starts from it, publishes
+it and deletes archives of other keys. With it, ``get_spark`` took
+about 40% less time on 4 cores (5.6 s against 9.9 s). Delete the
+directory to drop the archive; the next launch dumps a new one. No
+archive is used, and the launch is a plain one, when the JVM is
+already running (the flags, like ``spark.driver.memory``, act only at
+launch), when the cache directory cannot be written, when
+``SPARK_CONF_DIR`` (default ``$SPARK_HOME/conf``) holds any file but
+``*.template`` or another source adds to the driver's classpath, or
+while a dump of the same key is pending (its process is alive, or its
+JVM is still writing it). The JVM refuses a class-data archive when a
+non-empty directory is on its classpath, so a conf directory that
 holds only templates is swapped for an empty one for the launch, which
 changes no setting. The flags are appended to any
 ``spark.driver.extraJavaOptions`` the caller passes, and CDS logging is
@@ -69,7 +71,9 @@ import os
 import re
 import shutil
 import subprocess
+import sys
 import tempfile
+import time
 
 from pyspark.sql import SparkSession
 
@@ -82,6 +86,11 @@ _CLASSPATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH",
                   "SPARK_PREPEND_CLASSES", "PYSPARK_SUBMIT_ARGS")
 _PART = re.compile(r"(?P<key>[0-9a-f]+)\.(?P<pid>\d+)\.part")
 _QUIET = "-Xlog:cds*=off"
+# the first bytes of a finished dynamic archive (HotSpot's
+# CDS_DYNAMIC_ARCHIVE_MAGIC, in the machine's byte order)
+_MAGIC = (0xF00BABA8).to_bytes(4, sys.byteorder)
+# how long a dump whose header is still zero counts as being written
+_WRITING_S = 120
 
 
 def get_spark(
@@ -244,12 +253,15 @@ def _class_archive(conf: dict[str, str]) -> tuple[list[str], str] | None:
 def _publish(cds: str, key: str, java: str) -> bool:
     """Publish the first finished dump of ``key`` that a JVM starts from,
     and delete every other finished one. Returns whether a dump is
-    pending: a ``.part`` whose process is alive.
+    pending: a ``.part`` whose process is alive, or whose header is
+    still zero and which was written to in the last ``_WRITING_S``.
 
     The pid is the Python process's, and a JVM it did not wait for may
     still be writing the file. The JVM writes the archive's header last,
-    and until then a JVM skips the file as it would garbage, so such a
-    file is published harmlessly and completed in place."""
+    so a dump is finished once its header carries the archive's magic;
+    one whose header is still zero is left in place while it is fresh
+    and deleted once it is stale (its JVM was killed or the disk
+    filled). Only a file with the magic is checked and published."""
     archive = os.path.join(cds, f"{key}.jsa")
     pending = False
     for name in sorted(os.listdir(cds)):
@@ -260,7 +272,14 @@ def _publish(cds: str, key: str, java: str) -> bool:
             pending = True
             continue
         part = os.path.join(cds, name)
-        if not os.path.exists(archive) and _starts(java, part):
+        with open(part, "rb") as f:
+            header = f.read(len(_MAGIC))
+        if header == bytes(len(header)) and (
+            time.time() - os.path.getmtime(part) < _WRITING_S
+        ):
+            pending = True
+            continue
+        if not os.path.exists(archive) and header == _MAGIC and _starts(java, part):
             with contextlib.suppress(FileNotFoundError):  # published by a racing process
                 os.replace(part, archive)
             for other in os.listdir(cds):

@@ -67,6 +67,7 @@ on the class, the claim-table shape implemented and race-tested).
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
 import os
 import shutil
@@ -1947,9 +1948,11 @@ def _cow_commit(
     of ``_dv_commit``. Per attempt: one provenance scan over the
     snapshot counts the matched rows per file (matched rows are LIVE
     rows only: the view masks deletion vectors); ONE checkpointed
-    scan of the touched files then feeds both their rewrite and the
+    read of the touched files then feeds both their rewrite and the
     change-data preimage (guide §1.2: without the checkpoint each
-    write job re-scans the touched set). A DELETE keeps the rows
+    write job re-scans the touched set). The read scans each file on
+    its own, so every rewritten file holds the rows of one old file
+    and keeps its value range. A DELETE keeps the rows
     where the predicate is not TRUE; an UPDATE applies the
     assignments where it is TRUE and validates the rewrite against
     CHECK constraints. The counts against the manifest's live row
@@ -1973,8 +1976,19 @@ def _cow_commit(
         cdf_files: list[dict] | None = []
         if touched:
             pb = table_partitioning(path, version=base)
+            # one scan per touched file: a single scan packs small
+            # files into shared read splits, and the rewrite would
+            # merge files of distant value ranges into files spanning
+            # both, undoing the layout (cluster_by, z-order) that makes
+            # their stats prune
             src = truncate_lineage(
-                _mapped_read(spark, path, touched, version=base)
+                functools.reduce(
+                    DataFrame.union,
+                    [
+                        _mapped_read(spark, path, [f], version=base)
+                        for f in touched
+                    ],
+                )
             )
             preimage = src.filter(condition)
             if assignments is None:

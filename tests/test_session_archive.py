@@ -13,6 +13,7 @@ import json
 import os
 import subprocess
 import sys
+import time
 
 import pytest
 
@@ -132,13 +133,17 @@ def test_truncated_dump_is_deleted_not_published(dumped, tmp_path):
     part = os.path.join(cds, f"{_key()}.{_dead_pid()}.part")
     with open(archive, "rb") as src, open(part, "wb") as dst:
         dst.write(src.read(os.path.getsize(archive) // 3))
+    # a pending dump of a live process keeps this run from dumping a
+    # 150 MB archive of its own
+    pending = os.path.join(cds, f"{_key()}.{os.getpid()}.part")
+    with open(pending, "wb"):
+        pass
     report, _ = _drive(str(tmp_path / "cache"), cwd=str(tmp_path))
     assert not os.path.exists(part)
     # the crash of the check's JVM left no error report behind
     assert not list(tmp_path.glob("hs_err_pid*"))
     assert not os.path.exists(os.path.join(cds, f"{_key()}.jsa"))
-    # with nothing published, this run dumped an archive of its own
-    assert _archive_flags(report)[0].startswith("-XX:ArchiveClassesAtExit=")
+    assert _archive_flags(report) == []
 
 
 def test_garbage_at_published_name_starts_plain(tmp_path):
@@ -189,3 +194,35 @@ def test_caller_java_options_are_kept_and_flags_appended():
     assert merged == {"spark.driver.extraJavaOptions": "-Da=1  -Db=2 -XX:F1 -XX:F2", "spark.x": "y"}
     assert conf["spark.driver.extraJavaOptions"] == "-Da=1  -Db=2"
     assert session._with_java_options({}, ["-XX:F1"]) == {"spark.driver.extraJavaOptions": "-XX:F1"}
+
+
+def _dead_part(cds, header: bytes, age_s: float = 0.0) -> str:
+    """A ``.part`` of a dead pid starting with ``header``, last written
+    ``age_s`` ago."""
+    part = os.path.join(cds, f"{_key()}.{_dead_pid()}.part")
+    with open(part, "wb") as f:
+        f.write(header + bytes(1 << 12))
+    if age_s:
+        t = time.time() - age_s
+        os.utime(part, (t, t))
+    return part
+
+
+def test_dump_still_being_written_is_pending(tmp_path, monkeypatch):
+    # the JVM writes the header last: zero there means not finished
+    monkeypatch.setattr(session, "_starts", _never_started)
+    part = _dead_part(str(tmp_path), bytes(8))
+    assert session._publish(str(tmp_path), _key(), "java") is True
+    assert os.listdir(tmp_path) == [os.path.basename(part)]
+
+
+def test_stale_unfinished_dump_is_deleted_not_published(tmp_path, monkeypatch):
+    monkeypatch.setattr(session, "_starts", _never_started)
+    _dead_part(str(tmp_path), bytes(8), age_s=session._WRITING_S + 60)
+    _dead_part(str(tmp_path), os.urandom(8))  # no magic: never an archive
+    assert session._publish(str(tmp_path), _key(), "java") is False
+    assert os.listdir(tmp_path) == []
+
+
+def _never_started(java, archive):
+    raise AssertionError("a file without the archive magic was checked")
