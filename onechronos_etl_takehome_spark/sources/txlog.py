@@ -467,10 +467,15 @@ def _raw_file_read(
                 g = g.drop(c)
             g = g.withColumn(c, F.lit(v))
         parts.append(g)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p, allowMissingColumns=True)
-    return out
+    return _union_all(parts)
+
+
+def _union_all(frames) -> DataFrame:
+    """``unionByName`` over ``frames``; a column some frame lacks
+    reads as NULL there."""
+    return functools.reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
+    )
 
 
 # a deletion-vector anti-join side at or under this many dead rows is
@@ -1021,38 +1026,58 @@ def _parse_partition_dir(rel_dir: str, schema) -> dict:
     return out
 
 
-_TS_CONF_LOCK = threading.Lock()
-# session uuid → [depth, the session's value before the first hold]
-_TS_CONF_HOLDS: dict[str, list] = {}
+_CONF_LOCK = threading.Lock()
+# (session uuid, conf key) → [depth, the session's value before the
+# first hold]
+_CONF_HOLDS: dict[tuple, list] = {}
 
 
 @contextlib.contextmanager
-def _ts_conf_micros(sess):
-    """Hold ``spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS``
-    on ``sess`` for the duration, reentrantly and thread-safely: the
-    session's first holder records its prior value, its last one
-    restores it — concurrent stagers on one session (overlapped builds
-    and writes) all want the same value, so one depth-counted hold per
-    session is exact. Holds are keyed by session: sessions from
+def _conf_hold(sess, key: str, value: str):
+    """Hold ``key=value`` on ``sess`` for the duration, reentrantly and
+    thread-safely: the session's first holder records its prior value,
+    its last one restores it — concurrent holders of one key on one
+    session all want the same value, so one depth-counted hold per
+    (session, key) is exact. Holds are keyed by session: sessions from
     ``newSession()`` share the process but not their SQL confs, so one
     session's hold must neither stand in for another's nor restore its
     value into it."""
-    key = "spark.sql.parquet.outputTimestampType"
-    sid = sess._jsparkSession.sessionUUID()
-    with _TS_CONF_LOCK:
-        hold = _TS_CONF_HOLDS.get(sid)
+    hkey = (sess._jsparkSession.sessionUUID(), key)
+    with _CONF_LOCK:
+        hold = _CONF_HOLDS.get(hkey)
         if hold is None:
-            hold = _TS_CONF_HOLDS[sid] = [0, sess.conf.get(key)]
-            sess.conf.set(key, "TIMESTAMP_MICROS")
+            hold = _CONF_HOLDS[hkey] = [0, sess.conf.get(key)]
+            sess.conf.set(key, value)
         hold[0] += 1
     try:
         yield
     finally:
-        with _TS_CONF_LOCK:
+        with _CONF_LOCK:
             hold[0] -= 1
             if hold[0] == 0:
-                del _TS_CONF_HOLDS[sid]
+                del _CONF_HOLDS[hkey]
                 sess.conf.set(key, hold[1])
+
+
+def _ts_conf_micros(sess):
+    """Write parquet timestamps as TIMESTAMP_MICROS while held:
+    Spark's default INT96 carries no column statistics, so timestamp
+    columns would never prune."""
+    return _conf_hold(
+        sess, "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
+    )
+
+
+def _serial_listing(sess):
+    """List explicit file paths on the driver while held. Spark lists
+    more than 32 paths with a distributed job (~0.3 s of a plan build
+    on a local session); the paths a change-feed scan names are exact
+    files from the log, so one status call each is all the listing
+    they need, and the build stays flat in the commit count."""
+    return _conf_hold(
+        sess, "spark.sql.sources.parallelPartitionDiscovery.threshold",
+        str(2**31 - 1),
+    )
 
 
 def _stage_data(
@@ -1224,10 +1249,7 @@ def _stage_change_data(
         ))
     if not frames:
         return []
-    df = frames[0]
-    for other in frames[1:]:
-        df = df.unionByName(other, allowMissingColumns=True)
-    staged = _stage_data(df, path, prefix="change-")
+    staged = _stage_data(_union_all(frames), path, prefix="change-")
     return [{"name": f, "rows": n} for f, n, *_ in staged]
 
 
@@ -1824,16 +1846,19 @@ def _provenance_view(
     version: int,
     *,
     with_pos: bool = False,
+    mask: bool = True,
 ):
     """Logical view of ``files`` that KEEPS row provenance — ``_txb``
     (file basename; uuid-unique, so it resolves to the manifest
     relpath driver-side) and, with ``with_pos``, ``_txpos`` (the
     PHYSICAL row index) — alongside the mapped, partition-restored
     table columns, with existing deletion-vector masks anti-joined
-    away. The scan every DML uses to locate matched files and
-    positions. Built on ``_metadata`` rather than
-    ``input_file_name()``: the latter refuses multi-source plans,
-    which DV masking makes routine."""
+    away (``mask=False`` keeps file bytes as written, as
+    ``_mapped_read``'s does). The scan every DML uses to locate
+    matched files and positions, and the change feed's file scan.
+    Built on ``_metadata`` rather than ``input_file_name()``: the
+    latter refuses multi-source plans, which DV masking makes
+    routine."""
     pb = table_partitioning(path, version=version)
     fold = _fold_live(path, version)
     schema = _latest_schema(path, version)
@@ -1854,7 +1879,7 @@ def _provenance_view(
     else:  # pre-schema table: raw columns (no mapping/partitioning)
         lv = raw
     dvmap = {
-        f: fold[f]["dv"] for f in files if "dv" in fold.get(f, {})
+        f: fold[f]["dv"] for f in files if mask and "dv" in fold.get(f, {})
     }
     if dvmap:
         lv = lv.join(
@@ -1925,6 +1950,16 @@ def _touched_files(matched: DataFrame, snapshot) -> dict[str, int]:
     }
 
 
+def _per_file_scan(read, files) -> DataFrame:
+    """``read([f])`` for each of ``files``, unioned: one scan per
+    file, the layout rule every copy-on-write rewrite (DELETE, UPDATE,
+    both MERGEs) reads its touched files by. A single scan packs small
+    files into shared read splits, and the rewrite would merge files
+    of distant value ranges into files spanning both, undoing the
+    layout (cluster_by, z-order) that makes their stats prune."""
+    return _union_all([read([f]) for f in files])
+
+
 def _assigned(rows: DataFrame, assignments: dict) -> DataFrame:
     """``rows`` with the UPDATE ``assignments`` applied — one select,
     so every RHS sees the preimage row (SQL's simultaneous SET)."""
@@ -1976,18 +2011,10 @@ def _cow_commit(
         cdf_files: list[dict] | None = []
         if touched:
             pb = table_partitioning(path, version=base)
-            # one scan per touched file: a single scan packs small
-            # files into shared read splits, and the rewrite would
-            # merge files of distant value ranges into files spanning
-            # both, undoing the layout (cluster_by, z-order) that makes
-            # their stats prune
             src = truncate_lineage(
-                functools.reduce(
-                    DataFrame.union,
-                    [
-                        _mapped_read(spark, path, [f], version=base)
-                        for f in touched
-                    ],
+                _per_file_scan(
+                    lambda fs: _mapped_read(spark, path, fs, version=base),
+                    touched,
                 )
             )
             preimage = src.filter(condition)
@@ -2640,10 +2667,16 @@ def merge_upsert(
             table_constraints(path),
         )
         survivor_staged: list[tuple[str, int, dict, dict]] = []
-        if touched:
-            survivors = _mapped_read(
-                spark, path, touched, version=base
-            ).join(keys, key_cols, "left_anti")
+        touched_rows = (
+            _per_file_scan(
+                lambda fs: _mapped_read(spark, path, fs, version=base),
+                touched,
+            )
+            if touched
+            else None
+        )
+        if touched_rows is not None:
+            survivors = touched_rows.join(keys, key_cols, "left_anti")
             survivor_staged = _stage_data(
                 survivors, path, partition_by=pb or None
             )
@@ -2657,10 +2690,8 @@ def merge_upsert(
         # multiset-exact AND distributed; aligned to the union schema
         # for the evolution case where updates add a column.
         matched_old = (
-            _mapped_read(spark, path, touched, version=base).join(
-                keys, key_cols
-            )
-            if touched
+            touched_rows.join(keys, key_cols)
+            if touched_rows is not None
             else None
         )
         if matched_old is not None:
@@ -2885,14 +2916,16 @@ def merge_into(
         # --- classify live target rows against the source ------------
         with_pos = mode == "dv"
 
-        def _classify(files: list[str]) -> DataFrame:
-            """(_txb[, _txpos], t struct, s struct, _txap) over the
-            given files: left-join against the source and tag each
-            row with the index of the FIRST applied clause of its
-            population (-1 = keep)."""
-            prov = _provenance_view(
+        def _view(files: list[str]) -> DataFrame:
+            return _provenance_view(
                 spark, path, files, base, with_pos=with_pos
             )
+
+        def _classify(prov: DataFrame) -> DataFrame:
+            """(_txb[, _txpos], t struct, s struct, _txap) over a
+            provenance view: left-join against the source and tag
+            each row with the index of the FIRST applied clause of
+            its population (-1 = keep)."""
             tg = prov.select(
                 "_txb",
                 *(["_txpos"] if with_pos else []),
@@ -2930,7 +2963,7 @@ def merge_into(
             if not snapshot:
                 return []
             return (
-                _classify(snapshot)
+                _classify(_view(snapshot))
                 .filter(F.col("_txap") != -1)
                 .groupBy("_txb", "_txap")
                 .agg(F.count(F.lit(1)).alias("n"))
@@ -2955,8 +2988,11 @@ def merge_into(
         # positions) re-classifies ONLY the touched files — a
         # row-level _txb filter on the full frame could never prune at
         # the file level, so it would re-scan the whole table per
-        # staging pass
-        classified = _classify(touched) if touched else None
+        # staging pass — each in its own scan, so the survivors keep
+        # the layout
+        classified = (
+            _classify(_per_file_scan(_view, touched)) if touched else None
+        )
 
         def _applied_val(c: str):
             """Post-clause value of column ``c``: the first applied
@@ -3285,6 +3321,69 @@ def compact(
     return _transact(path, "compaction", plan)
 
 
+def _cdf_plan(
+    path: str, from_version: int, to_version: int
+) -> list[tuple[int, str, list[str], list[str]]]:
+    """How each commit in (from_version, to_version] reaches the change
+    data feed — the one commit classification behind batch
+    ``change_feed``, the ``readChangeFeed`` source and the
+    ``generate_change_files`` backfill. Reads each manifest once and
+    returns ``(version, kind, files, removes)`` entries in version
+    order; ``removes`` is empty except on ``diff``:
+
+    - ``changes``: the commit stamped commit-time change files
+      (``files``), which carry ``_change`` themselves;
+    - ``insert`` / ``delete``: a single-sided commit's added or
+      removed data files — every row of each is one change;
+    - ``diff``: an unstamped commit that both added (``files``) and
+      removed (``removes``) files — its changes are the multiset diff
+      of the two sides, so copy-on-write carry-over rows cancel.
+
+    A stamped EMPTY change set (OPTIMIZE) is known data-invisible and,
+    like a commit that touched no file, yields no entry."""
+    out: list[tuple[int, str, list[str], list[str]]] = []
+    for v in committed_versions(path):
+        if v <= from_version or v > to_version:
+            continue
+        with open(os.path.join(_log_path(path), f"{v:08d}.json")) as f:
+            manifest = json.load(f)
+        if "cdf" in manifest:
+            names = [e["name"] for e in manifest["cdf"]["files"]]
+            if names:
+                out.append((v, "changes", names, []))
+            continue
+        adds = [a["add"] for a in manifest["actions"] if "add" in a]
+        removes = [a["remove"] for a in manifest["actions"] if "remove" in a]
+        if adds and removes:
+            out.append((v, "diff", adds, removes))
+            continue
+        out += [
+            (v, k, fs, [])
+            for k, fs in (("insert", adds), ("delete", removes))
+            if fs
+        ]
+    return out
+
+
+def _commit_diff(
+    spark: SparkSession, path: str, adds, removes, version: int
+) -> tuple[DataFrame, DataFrame]:
+    """(inserts, deletes) of a two-sided commit without change files:
+    the multiset diffs rows(adds) ∖ rows(removes) and back, so
+    copy-on-write carry-over rows cancel. Read in the logical view at
+    ``version`` (physical names are stable, so one mapping resolves
+    every file era) but UNMASKED: legacy files carry no DVs at their
+    own commit, and a DV a LATER commit attached must not understate
+    this commit's inserts (round-12 advice: rows inserted at v and
+    DV-deleted at v' are an insert at v AND a delete at v', not
+    neither) — the streaming source's raw-byte diff agrees exactly."""
+    a, r = _align_for_diff(
+        _mapped_read(spark, path, adds, version=version, mask=False),
+        _mapped_read(spark, path, removes, version=version, mask=False),
+    )
+    return a.exceptAll(r), r.exceptAll(a)
+
+
 def change_feed(
     spark: SparkSession,
     path: str,
@@ -3297,48 +3396,47 @@ def change_feed(
     ``(_version, _change ∈ {'insert','delete'}, *table columns)`` —
     the Delta CDF / Iceberg changelog shape.
 
-    Commits that stamped COMMIT-TIME CHANGE FILES (every delete/merge
-    from round 11 on — Delta's ``_change_data``) read as an ordinary
-    scan of those files, with ``_change`` plus the table's physical
-    schema at ``to_version`` from the log (no inference job); a
-    stamped EMPTY set (OPTIMIZE) skips the commit outright. Legacy commits without the stamp derive changes
-    from the log's file diff: per commit, ``inserts = rows(added
-    files) exceptAll rows(removed files)`` and ``deletes =
-    rows(removed) exceptAll rows(added)`` — multiset difference, so
-    copy-on-write carry-over rows (a DELETE's survivors, a MERGE's
-    untouched neighbors, a compaction's entire payload) cancel
-    exactly and only REAL changes surface. Both paths produce the
-    same multiset (pinned in tests); an OPTIMIZE rewrite is
-    CDF-invisible either way, which is precisely the table-format
+    ``_cdf_plan`` classifies the commits. Commit-time CHANGE FILES
+    (every delete/merge from round 11 on — Delta's ``_change_data``)
+    and the data files of single-sided commits (pure appends, pure
+    removes) read as ordinary scans, with the table's physical schema
+    at ``to_version`` from the log (no inference job); a stamped EMPTY
+    set (OPTIMIZE) contributes nothing. Legacy two-sided commits
+    without the stamp derive changes from the log's file diff: per
+    commit, ``inserts = rows(added files) exceptAll rows(removed
+    files)`` and ``deletes = rows(removed) exceptAll rows(added)`` —
+    multiset difference, so copy-on-write carry-over rows (a DELETE's
+    survivors, a MERGE's untouched neighbors, a compaction's entire
+    payload) cancel exactly and only REAL changes surface. Both paths
+    produce the same multiset (pinned in tests); an OPTIMIZE rewrite
+    is CDF-invisible either way, which is precisely the table-format
     contract.
 
-    Scale: a change-file commit's CDF costs exactly its change
-    volume; a legacy diff commit reads only the files IT touched
-    (the log is the prune); an append's CDF is a pure scan of its
-    own files. Downstream incremental consumers poll
-    ``committed_versions`` and feed from their last seen version —
-    the streaming-source pattern (tests/test_txlog_stream.py drives
-    it)."""
+    Scale: every change file in range reads in ONE parquet scan and
+    every single-sided commit's data files in one more, however many
+    commits the range spans; ``_version``/``_change`` come from a
+    broadcast join of each row's file against a driver-built (file,
+    version, change) frame — a join, not a lookup, because one file
+    can be an insert at its append and a delete at a later pure-remove
+    commit. Only legacy diff commits add per-commit work, and each
+    reads just the files IT touched (the log is the prune).
+    Downstream incremental consumers poll ``committed_versions`` and
+    feed from their last seen version — the streaming-source pattern
+    (tests/test_txlog_stream.py drives it)."""
     from pyspark.sql.types import StringType, StructField, StructType
 
     _require_reader(path)
     to_version, versions = _resolve_version(path, to_version)
     if from_version not in versions:
         raise ValueError(f"from_version {from_version} not in {versions}")
-    out: DataFrame | None = None
-    for v in versions:
-        if v <= from_version or v > to_version:
-            continue
-        with open(os.path.join(_log_path(path), f"{v:08d}.json")) as f:
-            manifest = json.load(f)
-        if "cdf" in manifest:
-            # commit-time change files (round 11): the commit's exact
-            # row-level diff was written by the DML itself — read them
-            # as an ordinary scan; an empty list means KNOWN data-
-            # invisible (OPTIMIZE) and the commit is skipped outright
-            names = [e["name"] for e in manifest["cdf"]["files"]]
-            if not names:
-                continue
+    plan = _cdf_plan(path, from_version, to_version)
+    changes = [f for _, k, fs, _ in plan if k == "changes" for f in fs]
+    files = sorted(
+        {f for _, k, fs, _ in plan if k in ("insert", "delete") for f in fs}
+    )
+    scans: list[DataFrame] = []
+    with _serial_listing(spark):
+        if changes:
             # change files hold `_change` plus the physical columns
             # (partition columns included), read with the log's schema
             phys = _physical_schema(path, to_version, partitions=True)
@@ -3346,89 +3444,84 @@ def change_feed(
                 phys = StructType(
                     [StructField("_change", StringType()), *phys.fields]
                 )
-            raw = _parquet_reader(spark, phys).parquet(
-                *[os.path.join(path, n) for n in names]
-            )
             schema = _latest_schema(path, to_version)
             mapping = table_mapping(path, version=to_version)
-            sel = [
-                F.lit(v).cast("long").alias("_version"),
-                F.col("_change"),
-            ]
-            for fld in (schema.fields if schema is not None else []):
-                sel.append(
-                    F.col(mapping.get(fld.name, fld.name)).alias(fld.name)
-                )
-            tagged = raw.select(*sel)
-            out = (
-                tagged
-                if out is None
-                else out.unionByName(tagged, allowMissingColumns=True)
+            raw = _parquet_reader(spark, phys).parquet(
+                *[os.path.join(path, n) for n in changes]
             )
-            continue
-        adds = [a["add"] for a in manifest["actions"] if "add" in a]
-        removes = [a["remove"] for a in manifest["actions"] if "remove" in a]
-
-        def _read(names: list[str]) -> DataFrame | None:
-            if not names:
-                return None
+            scans.append(
+                raw.select(
+                    F.element_at(
+                        F.split(F.col("_metadata.file_path"), "/"), -1
+                    ).alias("_txb"),
+                    "_change",
+                    *[
+                        F.col(mapping.get(n, n)).alias(n)
+                        for n in (schema.fieldNames() if schema else [])
+                    ],
+                )
+            )
+        if files:
             # logical view at to_version: physical names are stable,
             # so one mapping resolves every file era in the range.
-            # mask=False: the diff must see file bytes as THIS commit
-            # wrote them — a DV attached by a LATER commit would
-            # mis-cancel rows alive at v (that later delete is its
-            # own feed entry), and the streaming source's raw-byte
-            # diff would disagree (round-12 advice).
-            return _mapped_read(
-                spark, path, names, version=to_version, mask=False
+            # mask=False: a DV attached by a LATER commit is that
+            # commit's own feed entry (the stream reads raw bytes too)
+            view = _provenance_view(
+                spark, path, files, to_version, mask=False
             )
-
-        a_df, r_df = _read(adds), _read(removes)
-        if (
-            a_df is not None
-            and r_df is not None
-            and a_df.columns != r_df.columns
-        ):
-            # a single commit whose adds and removes carry DIFFERENT
-            # (evolved) schemas: each side schema-merges independently,
-            # and exceptAll over mismatched column sets throws — align
-            # both to the union schema with typed null padding
-            types: dict[str, object] = {}
-            for side in (a_df, r_df):
-                for fld in side.schema.fields:
-                    types.setdefault(fld.name, fld.dataType)
-            all_cols = list(types)
-
-            def _pad(side: DataFrame) -> DataFrame:
-                return side.select(
-                    *[
-                        F.col(c)
-                        if c in side.columns
-                        else F.lit(None).cast(types[c]).alias(c)
-                        for c in all_cols
-                    ]
+            scans.append(
+                view.select(
+                    "_txb",
+                    F.lit(None).cast("string").alias("_change"),
+                    *[c for c in view.columns if c != "_txb"],
                 )
+            )
+    parts: list[DataFrame] = []
+    if scans:
+        import pyarrow as pa
 
-            a_df, r_df = _pad(a_df), _pad(r_df)
-        changes = []
-        if a_df is not None:
-            ins = a_df.exceptAll(r_df) if r_df is not None else a_df
-            changes.append(("insert", ins))
-        if r_df is not None:
-            dele = r_df.exceptAll(a_df) if a_df is not None else r_df
-            changes.append(("delete", dele))
-        for kind, df in changes:
-            tagged = df.select(
-                F.lit(v).cast("long").alias("_version"),
-                F.lit(kind).alias("_change"),
-                "*",
+        # (file, version, change) per scanned file and commit; change
+        # is NULL for a change file, whose rows carry their own. From
+        # an arrow table it is a local relation: no job builds it
+        txb, ver, tag = zip(
+            *[
+                (os.path.basename(f), v, None if k == "changes" else k)
+                for v, k, fs, _ in plan
+                if k != "diff"
+                for f in fs
+            ]
+        )
+        tags = spark.createDataFrame(
+            pa.table(
+                {
+                    "_txb": pa.array(txb, pa.string()),
+                    "_version": pa.array(ver, pa.int64()),
+                    "_tag": pa.array(tag, pa.string()),
+                }
             )
-            out = (
-                tagged
-                if out is None
-                else out.unionByName(tagged, allowMissingColumns=True)
+        )
+        rows = _union_all(scans)
+        parts.append(
+            rows.join(F.broadcast(tags), "_txb").select(
+                "_version",
+                F.coalesce("_change", "_tag").alias("_change"),
+                *[c for c in rows.columns if c not in ("_txb", "_change")],
             )
-    if out is None:
+        )
+    for v, kind, adds, removes in plan:
+        if kind == "diff":
+            parts += [
+                df.select(
+                    F.lit(v).cast("long").alias("_version"),
+                    F.lit(change).alias("_change"),
+                    "*",
+                )
+                for change, df in zip(
+                    ("insert", "delete"),
+                    _commit_diff(spark, path, adds, removes, to_version),
+                )
+            ]
+    if not parts:
         if from_version == to_version:
             raise ValueError(
                 f"no commits in ({from_version}, {to_version}] on {path}"
@@ -3440,7 +3533,7 @@ def change_feed(
             F.lit("insert").alias("_change"),
             "*",
         ).limit(0)
-    return out
+    return _union_all(parts)
 
 
 def generate_change_files(spark: SparkSession, path: str) -> list[int]:
@@ -3454,9 +3547,10 @@ def generate_change_files(spark: SparkSession, path: str) -> list[int]:
     ``exceptAll`` every DML runs at commit time), stages the rows as
     ordinary ``change-*`` files, and stamps the manifest in place
     (atomic replace; the manifest/fold caches key on inode+mtime and
-    self-invalidate). After it runs the CDF planner never emits a
-    diff partition for the table, and non-flat legacy tables become
-    streamable. Returns the stamped versions.
+    self-invalidate). It stamps exactly the ``diff`` entries of
+    ``_cdf_plan``; after it runs the planner emits none for the
+    table, and non-flat legacy tables become streamable. Returns the
+    stamped versions.
 
     Single-sided commits (pure appends / pure deletes) stay
     UNSTAMPED on purpose: their CDF already reads as ordinary tagged
@@ -3472,18 +3566,9 @@ def generate_change_files(spark: SparkSession, path: str) -> list[int]:
     versions = committed_versions(path)
     latest = versions[-1]
     stamped: list[int] = []
-    for v in versions:
-        mpath = os.path.join(_log_path(path), f"{v:08d}.json")
-        with open(mpath) as f:
-            manifest = json.load(f)
-        if "cdf" in manifest:
-            continue
-        adds = [a["add"] for a in manifest["actions"] if "add" in a]
-        removes = [
-            a["remove"] for a in manifest["actions"] if "remove" in a
-        ]
-        if not adds or not removes:
-            continue  # single-sided: already an ordinary CDF scan
+    for v, kind, adds, removes in _cdf_plan(path, versions[0] - 1, latest):
+        if kind != "diff":
+            continue  # stamped, or single-sided: already an ordinary scan
         missing = [
             f
             for f in adds + removes
@@ -3496,22 +3581,11 @@ def generate_change_files(spark: SparkSession, path: str) -> list[int]:
                 "removed them); the change set is no longer "
                 "reconstructible"
             )
-        # logical view at LATEST (physical names are stable, so one
-        # mapping resolves every file era) but UNMASKED (mask=False):
-        # legacy files carry no DVs at their own commit — a DV a
-        # LATER commit attached must not understate this commit's
-        # inserts (round-12 advice: rows inserted at v and DV-deleted
-        # at v' are an insert at v AND a delete at v', not neither).
-        # Matches the batch change_feed derived diff and the
-        # streaming source's raw-byte diff exactly.
-        a_df = _mapped_read(spark, path, adds, version=latest, mask=False)
-        r_df = _mapped_read(
-            spark, path, removes, version=latest, mask=False
-        )
-        a_al, r_al = _align_for_diff(a_df, r_df)
-        cdf_files = _stage_change_data(
-            r_al.exceptAll(a_al), a_al.exceptAll(r_al), path
-        )
+        inserts, deletes = _commit_diff(spark, path, adds, removes, latest)
+        cdf_files = _stage_change_data(deletes, inserts, path)
+        mpath = os.path.join(_log_path(path), f"{v:08d}.json")
+        with open(mpath) as f:
+            manifest = json.load(f)
         manifest["cdf"] = {"files": cdf_files}
         tmp = mpath + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as f:

@@ -26,14 +26,15 @@ Delta tables are read as streams:
   ``option("readChangeFeed", "true")`` — Delta's option, same name —
   makes every commit consumable as ``(_version, _change ∈
   {'insert','delete'}, *table columns)`` rows, the continuous form of
-  batch ``txlog.change_feed``: append-only commits stream as tagged
-  file scans (one partition per file, zero diff work); DML commits
-  that stamped commit-time change files (every delete/merge from
-  round 11 on) stream as ordinary scans of those files — one
-  partition per change file; LEGACY data-changing commits compute the
-  per-commit MULTISET diff in one partition bounded by the files that
-  commit touched. Either way copy-on-write carry-over rows cancel and
-  an OPTIMIZE rewrite is CDF-invisible. Works on the batch reader too
+  batch ``txlog.change_feed``, planned by the same function
+  (``txlog._cdf_plan``): single-sided commits stream as tagged file
+  scans and commits that stamped commit-time change files (every
+  delete/merge from round 11 on) as ordinary scans of those files —
+  one ``_CdfFilePartition`` per file, zero diff work; LEGACY
+  data-changing commits compute the per-commit MULTISET diff in one
+  partition bounded by the files that commit touched. Either way
+  copy-on-write carry-over rows cancel and an OPTIMIZE rewrite is
+  CDF-invisible. Works on the batch reader too
   (``startingVersion``/``endingVersion``, both INCLUSIVE — Delta's
   semantics). The gate pins streamed drain == batch change_feed over
   a create/append/delete/merge lifecycle plus a restart that must not
@@ -106,44 +107,8 @@ class TxlogStreamReader(DataSourceStreamReader):
                 "exclusive: the change feed EXPRESSES data-changing "
                 "commits, skipChangeCommits drops them"
             )
-        # startingVersion: first DELIVERED version — INCLUSIVE, matching
-        # Delta's semantics exactly since the option carries Delta's
-        # name (round-10 advice: an exclusive reading under the same
-        # name silently shifted ported code by one commit). Default 0 =
-        # full history. Internally the reader tracks the EXCLUSIVE
-        # cursor (startingVersion - 1).
-        # startingTimestamp (Delta's option): deliver commits whose
-        # manifest ts is AT OR AFTER it — resolved once here to the
-        # version just below the first qualifying commit. A timestamp
-        # past the newest commit starts at the log head (only NEW
-        # commits flow), where Delta would error — tailing an idle
-        # table from "now" is the common intent.
-        if "startingversion" in options and "startingtimestamp" in options:
-            raise ValueError(
-                "pass startingVersion OR startingTimestamp, not both"
-            )
-        if "startingtimestamp" in options:
-            t = txlog._as_epoch(options["startingtimestamp"])
-            versions = txlog.committed_versions(self.path)
-            if not versions:
-                raise ValueError(
-                    f"not a txlog table (no commits): {self.path}"
-                )
-            at_or_after = [
-                v for v in versions if txlog._manifest_ts(self.path, v) >= t
-            ]
-            self.starting_version = (
-                at_or_after[0] - 1 if at_or_after else versions[-1]
-            )
-        else:
-            sv = int(options.get("startingversion", 0))
-            if sv < 0:
-                raise ValueError(
-                    f"startingVersion must be >= 0 (got {sv}); it is "
-                    "INCLUSIVE (Delta's semantics) — 0 replays the "
-                    "full history"
-                )
-            self.starting_version = sv - 1
+        # the reader tracks the EXCLUSIVE cursor (startingVersion - 1)
+        self.starting_version = _start_cursor(self.path, options)
         # maxFilesPerTrigger (Delta's option, same name): bound each
         # microbatch to ~N ADDED FILES so a catch-up read of a long
         # history drains as a sequence of bounded batches instead of
@@ -286,15 +251,39 @@ class TxlogStreamReader(DataSourceStreamReader):
         return out or [_FilePartition(self.path, "", self.schema_json)]
 
     def read(self, partition):
-        if isinstance(
-            partition,
-            (_CdfFilePartition, _CdfDiffPartition, _CdcFilePartition),
-        ):
-            return _read_cdf_partition(partition)
-        return _read_file_partition(partition)
+        return _read_partition(partition)
 
     def commit(self, end: dict) -> None:
         pass  # offsets live in Spark's checkpoint; the log is immutable
+
+
+def _start_cursor(path: str, options: dict) -> int:
+    """The EXCLUSIVE version cursor a change read starts from.
+    ``startingVersion`` is the first DELIVERED version — INCLUSIVE,
+    matching Delta's semantics exactly since the option carries
+    Delta's name (round-10 advice: an exclusive reading under the same
+    name silently shifted ported code by one commit); default 0 = the
+    whole history. ``startingTimestamp`` (Delta's option) delivers
+    commits whose manifest ts is AT OR AFTER it; a timestamp past the
+    newest commit starts at the log head — only NEW commits flow to a
+    stream, and a batch read is empty — where Delta would error:
+    tailing an idle table from "now" is the common intent."""
+    if "startingversion" in options and "startingtimestamp" in options:
+        raise ValueError("pass startingVersion OR startingTimestamp, not both")
+    if "startingtimestamp" in options:
+        t = txlog._as_epoch(options["startingtimestamp"])
+        versions = txlog.committed_versions(path)
+        if not versions:
+            raise ValueError(f"not a txlog table (no commits): {path}")
+        at_or_after = [v for v in versions if txlog._manifest_ts(path, v) >= t]
+        return at_or_after[0] - 1 if at_or_after else versions[-1]
+    sv = int(options.get("startingversion", 0))
+    if sv < 0:
+        raise ValueError(
+            f"startingVersion must be >= 0 (got {sv}); it is INCLUSIVE "
+            "(Delta's semantics) — 0 reads the whole history"
+        )
+    return sv - 1
 
 
 def _arrow_schema(schema_json: str):
@@ -473,10 +462,11 @@ def _read_file_partition(partition: "_FilePartition"):
 
 
 class _CdfFilePartition(InputPartition):
-    """One data file of a SINGLE-SIDED commit (pure adds or pure
-    removes): every row of the file is one change of ``change`` kind,
-    so the partition is an ordinary tagged file scan — append-only
-    history streams CDF with zero diff work."""
+    """One file of the change feed, read as an ordinary tagged scan:
+    a commit-time CHANGE FILE (``change`` None — the file carries
+    ``_change`` itself), or a data file of a SINGLE-SIDED commit
+    (pure adds or pure removes), every row of which is one change of
+    ``change`` kind. One partition per file, zero diff work."""
 
     def __init__(
         self,
@@ -484,7 +474,7 @@ class _CdfFilePartition(InputPartition):
         fname: str,
         table_schema_json: str,
         version: int,
-        change: str,
+        change: str | None,
         mapping=None,
     ):
         self.path = path
@@ -495,39 +485,16 @@ class _CdfFilePartition(InputPartition):
         self.mapping = mapping or {}
 
 
-class _CdcFilePartition(InputPartition):
-    """One commit-time CHANGE FILE (round 11): the DML that committed
-    wrote its exact row-level diff as ``change-*`` parquet (table
-    columns + ``_change``), so reading the commit's CDF is an
-    ordinary file scan — one partition per change file, scaling with
-    the commit's change volume instead of funneling every touched
-    file through one diff task."""
-
-    def __init__(
-        self,
-        path: str,
-        fname: str,
-        table_schema_json: str,
-        version: int,
-        mapping=None,
-    ):
-        self.path = path
-        self.fname = fname
-        self.table_schema_json = table_schema_json
-        self.version = version
-        self.mapping = mapping or {}
-
-
 class _CdfDiffPartition(InputPartition):
-    """A commit that both ADDS and REMOVES files (copy-on-write
-    delete / merge / compaction): its row-level changes are the
-    per-commit MULTISET diff — inserts = rows(added) ∖ rows(removed),
-    deletes = rows(removed) ∖ rows(added) — so carried-over rows
-    cancel exactly and an OPTIMIZE rewrite is CDF-invisible, matching
-    batch ``txlog.change_feed``. One partition per such commit: the
-    diff needs both sides complete, and each side is bounded by the
-    files THAT COMMIT touched (never the table), which is the same
-    read amplification Delta pays for CDF without change files."""
+    """A LEGACY commit that both ADDS and REMOVES files without a
+    change-file stamp: its row-level changes are the per-commit
+    MULTISET diff — inserts = rows(added) ∖ rows(removed), deletes =
+    rows(removed) ∖ rows(added) — so carried-over rows cancel exactly
+    and an OPTIMIZE rewrite is CDF-invisible, matching batch
+    ``txlog.change_feed``. One partition per such commit: the diff
+    needs both sides complete, and each side is bounded by the files
+    THAT COMMIT touched (never the table), which is the same read
+    amplification Delta pays for CDF without change files."""
 
     def __init__(
         self,
@@ -553,68 +520,46 @@ def _cdf_partitions(
     table_schema_json: str,
     mapping=None,
 ) -> list:
-    """Plan the CDF partitions for commits in (start, end] — pure
-    manifest metadata, no data file opened."""
+    """The CDF input partitions for commits in (start, end]: one per
+    file of every ``txlog._cdf_plan`` scan entry, one per ``diff``
+    entry — pure manifest metadata, no data file opened."""
     out: list = []
-    for v in txlog.committed_versions(path):
-        if v <= start_version or v > end_version:
-            continue
-        with open(
-            os.path.join(path, txlog._LOG_DIR, f"{v:08d}.json")
-        ) as f:
-            manifest = json.load(f)
-        if "cdf" in manifest:
-            # commit-time change files: one ordinary scan partition
-            # per file; an empty list = KNOWN data-invisible commit
-            # (OPTIMIZE) — nothing to emit, no diff to prove it
-            out.extend(
-                _CdcFilePartition(
-                    path, e["name"], table_schema_json, v, mapping
-                )
-                for e in manifest["cdf"]["files"]
-            )
-            continue
-        adds = [a["add"] for a in manifest["actions"] if "add" in a]
-        removes = [a["remove"] for a in manifest["actions"] if "remove" in a]
-        if adds and removes:
-            # the diff keys rows by value tuples (Python Counter), so
-            # list/map/struct columns are unhashable — reject at PLAN
-            # time with a clear error instead of a worker TypeError
-            # (round-10 advice). Flat columns only is the documented
-            # diff-at-read bound; commit-time change files (round 11)
-            # have no such limit.
-            bad = [
-                fld["name"]
-                for fld in json.loads(table_schema_json)["fields"]
-                if isinstance(fld["type"], dict)
-            ]
-            if bad:
-                raise ValueError(
-                    f"change feed for commit {v} of {path} needs a "
-                    f"row-multiset diff, but non-flat column(s) "
-                    f"{bad} are not diffable at read time. Tables "
-                    "written with commit-time change files (any DML "
-                    "commit from protocol writer 3 on) stream CDF "
-                    "regardless of schema."
-                )
-            out.append(
-                _CdfDiffPartition(
-                    path, adds, removes, table_schema_json, v, mapping
-                )
-            )
-        else:
+    for v, kind, files, removes in txlog._cdf_plan(
+        path, start_version, end_version
+    ):
+        if kind != "diff":
+            change = None if kind == "changes" else kind
             out.extend(
                 _CdfFilePartition(
-                    path, f, table_schema_json, v, "insert", mapping
+                    path, f, table_schema_json, v, change, mapping
                 )
-                for f in adds
+                for f in files
             )
-            out.extend(
-                _CdfFilePartition(
-                    path, f, table_schema_json, v, "delete", mapping
-                )
-                for f in removes
+            continue
+        # the diff keys rows by value tuples (Python Counter), so
+        # list/map/struct columns are unhashable — reject at PLAN time
+        # with a clear error instead of a worker TypeError (round-10
+        # advice). Flat columns only is the documented diff-at-read
+        # bound; commit-time change files (round 11) have no such limit.
+        bad = [
+            fld["name"]
+            for fld in json.loads(table_schema_json)["fields"]
+            if isinstance(fld["type"], dict)
+        ]
+        if bad:
+            raise ValueError(
+                f"change feed for commit {v} of {path} needs a "
+                f"row-multiset diff, but non-flat column(s) "
+                f"{bad} are not diffable at read time. Tables "
+                "written with commit-time change files (any DML "
+                "commit from protocol writer 3 on) stream CDF "
+                "regardless of schema."
             )
+        out.append(
+            _CdfDiffPartition(
+                path, files, removes, table_schema_json, v, mapping
+            )
+        )
     return out
 
 
@@ -673,23 +618,26 @@ def _counter_to_table(counter, target):
     return pa.table(cols, schema=target)
 
 
-def _emit_changes(tbl, version: int, change: str, full_schema):
-    """Prepend the (_version, _change) meta columns and batch up."""
+def _emit_changes(tbl, version: int, change: str | None, full_schema):
+    """Prepend the meta columns — ``_change`` only when given (a change
+    file carries its own) — and batch up."""
     import pyarrow as pa
 
     n = len(tbl)
-    cols = [
-        pa.array([version] * n, type=pa.int64()),
-        pa.array([change] * n, type=pa.string()),
-    ] + [tbl.column(i) for i in range(tbl.num_columns)]
-    return pa.table(cols, schema=full_schema).to_batches()
+    cols = [pa.array([version] * n, type=pa.int64())]
+    if change is not None:
+        cols.append(pa.array([change] * n, type=pa.string()))
+    return pa.table(cols + tbl.columns, schema=full_schema).to_batches()
 
 
-def _read_cdf_partition(partition):
-    """Executor-side CDF read: tagged scan for single-sided commits,
-    in-memory multiset diff for data-changing ones."""
+def _read_partition(partition):
+    """Executor-side read shared by the batch and stream readers: a
+    table file, a tagged CDF file scan, or a legacy commit's
+    in-memory multiset diff."""
     import pyarrow as pa
 
+    if not isinstance(partition, (_CdfFilePartition, _CdfDiffPartition)):
+        return _read_file_partition(partition)
     target = _arrow_schema(partition.table_schema_json)
     full = pa.schema(
         [
@@ -698,33 +646,15 @@ def _read_cdf_partition(partition):
         ]
         + list(target)
     )
-    if isinstance(partition, _CdcFilePartition):
-        # commit-time change file: _change comes from the file itself,
-        # table columns align through the mapping like any data file
-        import pyarrow.parquet as pq
-
-        raw = pq.read_table(
-            os.path.join(partition.path, partition.fname)
-        )
-        n = len(raw)
-        cols = [
-            pa.array([partition.version] * n, type=pa.int64()),
-            raw["_change"].cast(pa.string()).combine_chunks(),
-        ]
-        for field in target:
-            phys = partition.mapping.get(field.name, field.name)
-            if phys in raw.column_names:
-                cols.append(raw[phys].cast(field.type))
-            else:  # evolved later than this commit: null-fill
-                cols.append(pa.nulls(n, type=field.type))
-        return iter(pa.table(cols, schema=full).to_batches())
+    v = partition.version
     if isinstance(partition, _CdfFilePartition):
+        # a change file aligns its own `_change` column with the table
+        # columns (through the mapping, like any data file)
+        cols = target if partition.change else pa.schema(list(full)[1:])
         tbl = _aligned_table(
-            partition.path, [partition.fname], target, partition.mapping
+            partition.path, [partition.fname], cols, partition.mapping
         )
-        return iter(
-            _emit_changes(tbl, partition.version, partition.change, full)
-        )
+        return iter(_emit_changes(tbl, v, partition.change, full))
     a = _aligned_table(
         partition.path, partition.adds, target, partition.mapping
     )
@@ -732,12 +662,10 @@ def _read_cdf_partition(partition):
         partition.path, partition.removes, target, partition.mapping
     )
     ins, dele = _multiset_diff(a, r)
-    batches = _emit_changes(
-        _counter_to_table(ins, target), partition.version, "insert", full
-    ) + _emit_changes(
-        _counter_to_table(dele, target), partition.version, "delete", full
+    return iter(
+        _emit_changes(_counter_to_table(ins, target), v, "insert", full)
+        + _emit_changes(_counter_to_table(dele, target), v, "delete", full)
     )
-    return iter(batches)
 
 
 def _strip_cdf_meta(schema_json: str) -> str:
@@ -898,47 +826,17 @@ class TxlogBatchReader(DataSourceReader):
                     "not version/timestampAsOf"
                 )
             self.version = None
-            if (
-                "startingversion" in options
-                and "startingtimestamp" in options
-            ):
-                raise ValueError(
-                    "pass startingVersion OR startingTimestamp, not both"
-                )
+            self.starting_version = _start_cursor(self.path, options)
             if "endingversion" in options and "endingtimestamp" in options:
                 raise ValueError(
                     "pass endingVersion OR endingTimestamp, not both"
                 )
-            versions = txlog.committed_versions(self.path)
-            if "startingtimestamp" in options:
-                # Delta's option: deliver commits whose manifest ts is
-                # AT OR AFTER it (same resolution the stream reader
-                # does; a timestamp past the newest commit yields an
-                # empty feed — the batch read has no 'future commits')
-                t = txlog._as_epoch(options["startingtimestamp"])
-                at_or_after = [
-                    v
-                    for v in versions
-                    if txlog._manifest_ts(self.path, v) >= t
-                ]
-                self.starting_version = (
-                    at_or_after[0] - 1 if at_or_after else versions[-1]
-                )
-            else:
-                sv = int(options.get("startingversion", 0))
-                if sv < 0:
-                    raise ValueError(
-                        f"startingVersion must be >= 0 (got {sv}); it is "
-                        "INCLUSIVE (Delta's semantics) — 0 reads the "
-                        "whole history"
-                    )
-                self.starting_version = sv - 1
             if "endingtimestamp" in options:
                 # newest commit AT OR BEFORE it — timestampAsOf's rule
                 t = txlog._as_epoch(options["endingtimestamp"])
                 at_or_before = [
                     v
-                    for v in versions
+                    for v in txlog.committed_versions(self.path)
                     if txlog._manifest_ts(self.path, v) <= t
                 ]
                 if not at_or_before:
@@ -1013,12 +911,7 @@ class TxlogBatchReader(DataSourceReader):
         ]
 
     def read(self, partition):
-        if isinstance(
-            partition,
-            (_CdfFilePartition, _CdfDiffPartition, _CdcFilePartition),
-        ):
-            return _read_cdf_partition(partition)
-        return _read_file_partition(partition)
+        return _read_partition(partition)
 
 
 def _resolve_option_version(path: str, options: dict) -> int | None:

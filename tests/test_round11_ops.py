@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 
 import pytest
@@ -292,20 +293,13 @@ class TestCommitTimeChangeFiles:
             assert os.path.exists(os.path.join(table, e["name"]))
 
     def test_planner_scans_change_files_not_diff(self, spark, table):
-        from onechronos_etl_takehome_spark.streaming.txlog_source import (
-            _cdf_partitions,
-            _CdcFilePartition,
-            _CdfDiffPartition,
-        )
-
         self._lifecycle(spark, table)
-        schema = txlog.read_table(spark, table).schema.json()
-        parts = _cdf_partitions(
-            table, -1, txlog.committed_versions(table)[-1], schema, {}
+        plan = txlog._cdf_plan(
+            table, -1, txlog.committed_versions(table)[-1]
         )
-        kinds = {type(p).__name__ for p in parts}
-        assert "_CdcFilePartition" in kinds
-        assert "_CdfDiffPartition" not in kinds
+        kinds = {kind for _, kind, *_ in plan}
+        assert "changes" in kinds
+        assert "diff" not in kinds
 
     def test_feed_matches_relational_recomputation(self, spark, table):
         """The change-file path must produce EXACTLY the multiset the
@@ -384,6 +378,110 @@ class TestCommitTimeChangeFiles:
             r["k"] for r in feed.filter("_change = 'delete'").collect()
         )
         assert got == [0, 2, 4]
+
+    def test_feed_with_one_legacy_commit_matches_stamped(self, spark, table):
+        """A range mixing one stripped (legacy) two-sided commit with
+        stamped ones reads the same multiset as the all-stamped feed."""
+        self._lifecycle(spark, table)
+        modern = sorted(
+            map(tuple, txlog.change_feed(spark, table, from_version=0)
+                .collect())
+        )
+        delete_v = next(
+            v for v in txlog.committed_versions(table)
+            if _manifest(table, v).get("metrics", {}).get("op") == "delete"
+        )
+        m = _manifest(table, delete_v)
+        del m["cdf"]
+        mf = os.path.join(table, txlog._LOG_DIR, f"{delete_v:08d}.json")
+        os.unlink(mf)
+        with open(mf, "w") as f:
+            json.dump(m, f)
+        txlog._FOLD_CACHE.clear()
+        plan = txlog._cdf_plan(
+            table, 0, txlog.committed_versions(table)[-1]
+        )
+        assert [v for v, kind, *_ in plan if kind == "diff"] == [delete_v]
+        assert "changes" in {kind for _, kind, *_ in plan}
+        mixed = txlog.change_feed(spark, table, from_version=0)
+        assert sorted(map(tuple, mixed.collect())) == modern
+
+    def test_file_inserted_then_purely_removed_shows_twice(
+        self, spark, table, tmp_path
+    ):
+        """One file is an insert at its append and a delete at a later
+        pure-remove commit: both rows surface, batch and streamed."""
+        _register_source(spark)
+        txlog.create_table(
+            spark.createDataFrame([(0, 0), (2, 0)], "k long, tag long")
+            .coalesce(1),
+            table,
+        )
+        txlog.append(
+            spark.createDataFrame([(1, 1), (3, 1)], "k long, tag long")
+            .coalesce(1),
+            table,
+        )
+        v = txlog.delete_where(spark, table, F.col("tag") == 1)
+        assert "cdf" not in _manifest(table, v)
+        want = sorted(
+            [(1, "insert", 1, 1), (1, "insert", 3, 1)]
+            + [(v, "delete", 1, 1), (v, "delete", 3, 1)]
+        )
+        feed = txlog.change_feed(spark, table, from_version=0)
+        assert sorted(map(tuple, feed.collect())) == want
+        reader = (
+            spark.read.format("txlog")
+            .option("path", table)
+            .option("readChangeFeed", "true")
+            .option("startingVersion", "1")
+        )
+        assert sorted(map(tuple, reader.load().collect())) == want
+        q = (
+            spark.readStream.format("txlog")
+            .option("path", table)
+            .option("readChangeFeed", "true")
+            .option("startingVersion", "1")
+            .load()
+            .writeStream.format("parquet")
+            .option("path", str(tmp_path / "out"))
+            .option("checkpointLocation", str(tmp_path / "ck"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(300)
+        streamed = spark.read.parquet(str(tmp_path / "out"))
+        assert sorted(map(tuple, streamed.collect())) == want
+
+    def test_feed_plan_scans_stay_flat_in_commit_count(self, spark, table):
+        """Stamped and single-sided commits read in at most two file
+        scans (change files, data files), however many commits."""
+
+        def batch(k):
+            return spark.range(k * 10, k * 10 + 10).select(
+                F.col("id").alias("k"), (F.col("id") % 3).alias("tag")
+            ).coalesce(1)
+
+        def file_relations():
+            feed = txlog.change_feed(spark, table, from_version=0)
+            plan = feed._jdf.queryExecution().optimizedPlan().toString()
+            return len(re.findall(r"\bRelation\b", plan))
+
+        txlog.create_table(batch(0), table)
+        relations, inserted = {}, 0
+        for k in range(1, 43):
+            if k % 10 == 3:
+                # leaves survivors: a stamped copy-on-write delete
+                txlog.delete_where(spark, table, F.col("k") == k * 10 - 25)
+            else:
+                txlog.append(batch(k), table)
+                inserted += 10
+            if k in (5, 42):
+                relations[k] = file_relations()
+        assert relations == {5: 2, 42: 2}
+        feed = txlog.change_feed(spark, table, from_version=0)
+        got = dict(map(tuple, feed.groupBy("_change").count().collect()))
+        assert got == {"insert": inserted, "delete": 4}
 
     def test_nonflat_table_dml_streams_cdf(self, spark, table, tmp_path):
         """Array columns are undiffable at read time, but change-file

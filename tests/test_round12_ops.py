@@ -219,10 +219,6 @@ class TestGenerateChangeFiles:
     def test_backfill_matches_derived_and_retires_diff_plan(
         self, spark, table
     ):
-        from onechronos_etl_takehome_spark.streaming.txlog_source import (
-            _cdf_partitions,
-        )
-
         self._lifecycle(spark, table)
         modern = sorted(
             map(tuple, txlog.change_feed(spark, table, from_version=0)
@@ -248,14 +244,11 @@ class TestGenerateChangeFiles:
                 .collect())
         )
         assert after == modern
-        # the streaming planner emits NO diff partition anymore
-        schema = txlog.read_table(spark, table).schema.json()
-        parts = _cdf_partitions(
-            table, -1, txlog.committed_versions(table)[-1], schema, {}
+        # the planner emits NO diff entry anymore
+        plan = txlog._cdf_plan(
+            table, -1, txlog.committed_versions(table)[-1]
         )
-        assert "_CdfDiffPartition" not in {
-            type(p).__name__ for p in parts
-        }
+        assert "diff" not in {kind for _, kind, *_ in plan}
         # idempotent: a second run stamps nothing
         assert txlog.generate_change_files(spark, table) == []
 

@@ -334,6 +334,35 @@ class TestDataSkipping:
         new, _ = txlog.skipped_files(table, {"id": (5000, 5999)})
         assert not set(old) & set(new)
 
+    @pytest.mark.parametrize("op", ["merge_into", "merge_upsert"])
+    def test_skipping_survives_merge(self, spark, table, op):
+        # a merge touching files of both ranges rewrites each touched
+        # file on its own, like a delete does
+        def frame(lo, hi, step, v):
+            return spark.range(lo, hi, step).select(
+                "id", F.lit(v).cast("long").alias("v")
+            )
+
+        txlog.create_table(frame(0, 1000, 1, 0), table, cluster_by="id")
+        txlog.append(frame(5000, 6000, 1, 0), table, cluster_by="id")
+        # odd ids of both ranges; no source partition spans both
+        src = frame(1, 1000, 2, 1).union(frame(5001, 6000, 2, 1))
+        if op == "merge_into":
+            txlog.merge_into(
+                spark, table, src, ["id"],
+                clauses=[
+                    {"when": "matched", "action": "update",
+                     "set": {"v": "s.v"}},
+                ],
+            )
+        else:
+            txlog.merge_upsert(spark, table, src, ["id"])
+        got = txlog.read_table(spark, table).groupBy("v").count()
+        assert sorted(map(tuple, got.collect())) == [(0, 1000), (1, 1000)]
+        old, _ = txlog.skipped_files(table, {"id": (0, 999)})
+        new, _ = txlog.skipped_files(table, {"id": (5000, 5999)})
+        assert not set(old) & set(new)
+
 
 class TestChangeFeed:
     def test_append_and_delete_changes_surface_exactly(self, spark, table):
@@ -1293,6 +1322,6 @@ class TestTimestampConfPerSession:
             sys.setswitchinterval(prev)
         assert not any(t.is_alive() for t in threads)
         assert seen_outside_hold == []
-        assert txlog._TS_CONF_HOLDS == {}
+        assert txlog._CONF_HOLDS == {}
         assert sessions[0].conf.get(key) == "INT96"
         assert sessions[1].conf.get(key) == "TIMESTAMP_MILLIS"
