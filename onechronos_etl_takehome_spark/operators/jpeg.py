@@ -247,22 +247,24 @@ def _split_entropy(payload: bytes, start: int):
     if len(nonrst) == 0:
         raise ValueError("JPEG truncated before next marker")
     end = int(nonrst[0])
-    # FF FF fill bytes inside the scan: the reference _BitReader
-    # raises "unexpected marker FFFF" the moment it CONSUMES one, and
+    # FF bytes right before the terminating marker are fill (T.81
+    # B.1.1.2): entropy data never holds an unstuffed FF, and the
+    # reference _BitReader stops after the last MCU without reading
+    # them. Any other FF FF inside the scan is one the reference
+    # raises "unexpected marker FFFF" on the moment it CONSUMES it;
     # treating the first FF as entropy data here would silently
-    # mis-decode such a stream instead (round-14 advice). Reject the
-    # whole scan — conservative for the (spec-legal but never
-    # self-encoded) case of fill bytes trailing the last MCU, which a
-    # lazy reader would never touch; parity on self-encoded payloads
-    # is unaffected because the encoder never emits fill bytes.
+    # mis-decode such a stream instead, so the whole scan is rejected.
+    data_end = end
+    while data_end and arr[data_end - 1] == 0xFF:
+        data_end -= 1
     ff2 = ff[nxt == 0xFF]
-    if len(ff2) and int(ff2[0]) < end:
+    if len(ff2) and int(ff2[0]) < data_end:
         raise ValueError("unexpected marker FFFF in scan")
     rsts = [int(r) for r in mk[is_rst] if r < end]
     bounds = [0]
     for r in rsts:
         bounds += [r, r + 2]
-    bounds.append(end)
+    bounds.append(data_end)
     segs = []
     for i in range(0, len(bounds), 2):
         seg = arr[bounds[i] : bounds[i + 1]]
@@ -651,17 +653,24 @@ def _dense_code_tables(
     code table given as ``tuple(codes.items())``. Cached: the encoder
     only ever uses the four Annex-K tables, and rebuilding the dense
     form per plane (a ~260-assignment python loop) profiled as the
-    dominant per-call cost of encoding small frames. Absent symbols
-    stay 0 and are never indexed — valid streams only produce defined
-    symbols."""
-    n = max(sym for sym, _ in items) + 1
-    code_t = np.zeros(n, np.int64)
-    len_t = np.zeros(n, np.int64)
+    dominant per-call cost of encoding small frames. One slot per byte
+    symbol; an absent symbol has length 0, which ``_require_codes``
+    turns into the reference walk's ``KeyError``."""
+    code_t = np.zeros(256, np.int64)
+    len_t = np.zeros(256, np.int64)
     for sym, (code, ln) in items:
         code_t[sym], len_t[sym] = code, ln
     code_t.setflags(write=False)
     len_t.setflags(write=False)
     return code_t, len_t
+
+
+def _require_codes(len_t: np.ndarray, syms: np.ndarray) -> None:
+    """Raise ``KeyError`` for the first of ``syms`` the table does not
+    define — the reference walk's failing dict lookup, vectorized."""
+    missing = syms[len_t[syms] == 0]
+    if len(missing):
+        raise KeyError(int(missing[0]))
 
 
 def _encode_plane_symbols(
@@ -694,10 +703,11 @@ def _encode_plane_symbols(
         ]
     dcat = np.searchsorted(_CAT_BOUNDS, np.abs(diffs), side="right")
     damp = np.where(diffs >= 0, diffs, diffs + (np.int64(1) << dcat) - 1)
-    zrl_code, zrl_len = ac_codes[0xF0]
-    eob_code, eob_len = ac_codes[0x00]
     dc_code_t, dc_len_t = _dense_code_tables(tuple(dc_codes.items()))
     ac_code_t, ac_len_t = _dense_code_tables(tuple(ac_codes.items()))
+    zrl_code, zrl_len = ac_code_t[0xF0], ac_len_t[0xF0]
+    eob_code, eob_len = ac_code_t[0x00], ac_len_t[0x00]
+    _require_codes(dc_len_t, dcat)
     # DC symbol per block: (code<<cat)|amplitude — cat 0 has amp 0, so
     # the formula is uniform
     dc_vals = (dc_code_t[dcat] << dcat) | damp
@@ -733,6 +743,12 @@ def _encode_plane_symbols(
     if len(ki):
         np.maximum.at(last_k, bi, ki)  # ks ascend per block: max==last
     eob = last_k < 63
+    ac_needed = [sym]
+    if n_zrl.any():
+        ac_needed.append([0xF0])
+    if eob.any():
+        ac_needed.append([0x00])
+    _require_codes(ac_len_t, np.concatenate(ac_needed))
     # assemble: [DC][AC run...][EOB?] per block, flat
     ac_per_block = np.bincount(bi, seg, minlength=nb).astype(np.int64)
     cnt = 1 + ac_per_block + eob

@@ -246,7 +246,6 @@ def x56_txlog_cdf_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume; after it, every CDF read of the table is ordinary
     per-file scan partitions — the one-Python-task read-time diff is
     retired for good."""
-    import json
     import os
     import tempfile
 
@@ -275,18 +274,11 @@ def x56_txlog_cdf_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # strip every cdf stamp + change file: the byte shape a legacy
     # (pre-writer-3) writer leaves behind
-    for v in txlog.committed_versions(path):
-        mf = os.path.join(path, txlog._LOG_DIR, f"{v:08d}.json")
-        with open(mf) as f:
-            m = json.load(f)
+    for v, m in txlog._manifests(path, -1):
         if "cdf" in m:
-            for e in m["cdf"]["files"]:
+            for e in m.pop("cdf")["files"]:
                 os.unlink(os.path.join(path, e["name"]))
-            del m["cdf"]
-            os.unlink(mf)
-            with open(mf, "w") as f:
-                json.dump(m, f)
-    txlog._FOLD_CACHE.clear()
+            txlog._replace_manifest(path, v, m)
     txlog.generate_change_files(spark, path)
     return txlog.change_feed(spark, path, from_version=0).groupBy(
         F.col("_version").alias("vsn"), F.col("_change").alias("chg")

@@ -28,7 +28,6 @@ to the staged parquet like any filter.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -48,16 +47,8 @@ def table_constraints(
     newest manifest at-or-before it carrying a ``constraints`` field.
     Empty dict for tables that never declared one."""
     version, _ = txlog._resolve_version(path, version)
-    for v in reversed(
-        [x for x in txlog.committed_versions(path) if x <= version]
-    ):
-        with open(
-            os.path.join(txlog._log_path(path), f"{v:08d}.json")
-        ) as f:
-            manifest = json.load(f)
-        if "constraints" in manifest:
-            return dict(manifest["constraints"])
-    return {}
+    fold = txlog._manifest_field_fold(path, version, "constraints")
+    return dict(fold or {})
 
 
 def _violates(expr: str):

@@ -14,7 +14,12 @@ rows must rewrite 0.1% of files, not the table:
   (no data read). Data files are immutable; nothing is ever modified
   in place, so readers at any version see a complete, consistent
   table (snapshot isolation) and a crashed writer leaves at most an
-  orphaned data file, never a torn table.
+  orphaned data file, never a torn table. This module alone knows
+  the layout. Past the commit itself and the checkpoints,
+  ``_manifest`` (one version), ``_manifests`` (a version range) and
+  ``_replace_manifest`` (the atomic rewrite of a closed manifest) are
+  the only ways into ``_txlog/``, here and in every other module
+  (pinned by an ``ast`` test).
 - **Commit protocol**: write the manifest to a private temp name,
   then ``os.link`` it to ``<version>.json`` — link fails with EEXIST
   if another writer committed that version first (POSIX exclusive
@@ -265,48 +270,88 @@ def _log_path(path: str) -> str:
     return os.path.join(path, _LOG_DIR)
 
 
+def _manifest_path(path: str, version: int) -> str:
+    return os.path.join(_log_path(path), f"{version:08d}.json")
+
+
+def _manifest(path: str, version: int) -> dict:
+    """Committed manifest ``version`` of the table at ``path``.
+    Uncached: the folds below cache what they derive from it."""
+    with open(_manifest_path(path, version)) as f:
+        return json.load(f)
+
+
+def _manifests(path: str, lo: int, hi: int | None = None):
+    """``(v, manifest)`` for every committed version ``lo < v <= hi``
+    (through the newest when ``hi`` is None), in version order."""
+    for v in committed_versions(path):
+        if hi is not None and v > hi:
+            break
+        if v > lo:
+            yield v, _manifest(path, v)
+
+
+def _replace_manifest(path: str, version: int, manifest: dict) -> None:
+    """Atomically rewrite committed manifest ``version`` (temp file,
+    then ``os.replace``): a reader sees the old manifest or the new
+    one, never a torn one. The new file has a new inode, so the
+    identity-keyed folds below drop their old entries by themselves."""
+    target = _manifest_path(path, version)
+    tmp = target + f".tmp-{uuid.uuid4().hex}"
+    with open(tmp, "w") as f:
+        json.dump(manifest, f)
+    os.replace(tmp, target)
+
+
 _FOLD_CACHE: dict = {}
+
+
+def _cached_fold(path: str, version: int, tag: str, fold):
+    """``fold()``, CACHED per (realpath, version, tag, manifest
+    identity): manifests are immutable once committed, so the resolved
+    version fully determines a fold of the log up to it; the
+    manifest's (inode, mtime_ns, size) in the key means a table
+    deleted and recreated at the same path, or a manifest rewritten by
+    ``_replace_manifest``, can never serve stale state (inode numbers
+    alone get reused after unlink). An uncommitted version is folded
+    uncached."""
+    try:
+        st = os.stat(_manifest_path(path, version))
+    except OSError:
+        return fold()
+    key = (
+        os.path.realpath(path), version, tag,
+        st.st_ino, st.st_mtime_ns, st.st_size,
+    )
+    miss = object()
+    out = _FOLD_CACHE.get(key, miss)  # one lookup: a concurrent clear()
+    if out is miss:  # between a check and a read cannot lose the entry
+        out = fold()
+        if len(_FOLD_CACHE) > 4096:  # bounded: wholesale reset, re-warm
+            _FOLD_CACHE.clear()
+        _FOLD_CACHE[key] = out
+    return out
 
 
 def _manifest_field_fold(path: str, version: int, field: str):
     """Newest manifest at-or-before ``version`` carrying ``field`` →
     its value (None when no manifest does) — the carry-forward fold
     the schema / constraints / protocol / mapping fields share.
-
-    CACHED per (realpath, version, field, manifest identity):
-    manifests are immutable once committed, so the resolved version
-    fully determines the fold result; the manifest's (inode,
-    mtime_ns, size) in the key means a table deleted and recreated at
-    the same path can never serve stale state (inode numbers alone
-    get reused after unlink). Without the cache, legacy tables that
+    Cached (``_cached_fold``): without the cache, legacy tables that
     never commit after a feature lands re-scan O(commits) JSON
     manifests on EVERY read's protocol/mapping lookup (round-10
     advice)."""
-    key = None
-    try:
-        st = os.stat(os.path.join(_log_path(path), f"{version:08d}.json"))
-        key = (
-            os.path.realpath(path), version, field,
-            st.st_ino, st.st_mtime_ns, st.st_size,
-        )
-        if key in _FOLD_CACHE:
-            return _FOLD_CACHE[key]
-    except OSError:
-        pass  # uncommitted version: fall through to the raw fold
-    out = None
-    for v in reversed(
-        [x for x in committed_versions(path) if x <= version]
-    ):
-        with open(os.path.join(_log_path(path), f"{v:08d}.json")) as f:
-            manifest = json.load(f)
-        if field in manifest:
-            out = manifest[field]
-            break
-    if key is not None:
-        if len(_FOLD_CACHE) > 4096:  # bounded: wholesale reset, re-warm
-            _FOLD_CACHE.clear()
-        _FOLD_CACHE[key] = out
-    return out
+
+    def fold():
+        for v in reversed(
+            [x for x in committed_versions(path) if x <= version]
+        ):
+            manifest = _manifest(path, v)
+            if field in manifest:
+                return manifest[field]
+        return None
+
+    return _cached_fold(path, version, field, fold)
 
 
 def table_protocol(path: str, *, version: int | None = None) -> dict:
@@ -647,9 +692,8 @@ def _commit(
         manifest.update(extra)
     with open(tmp, "w") as f:
         json.dump(manifest, f)
-    target = os.path.join(d, f"{version:08d}.json")
     try:
-        _COMMIT_COORDINATOR.publish(tmp, target)
+        _COMMIT_COORDINATOR.publish(tmp, _manifest_path(path, version))
     except CommitConflict:
         raise CommitConflict(f"version {version} already committed")
     finally:
@@ -729,38 +773,17 @@ def _maybe_checkpoint(path: str, version: int) -> None:
     os.replace(tmp, _checkpoint_path(path, version))
 
 
-def _fold_live(
-    path: str, version: int, versions: list[int] | None = None
-) -> dict[str, dict]:
+def _fold_live(path: str, version: int) -> dict[str, dict]:
     """Fold manifests 0..version → {file: {"rows": n, "stats": {col:
     [min, max]}}}, starting from the newest checkpoint ≤ version when
-    one exists. Cached per (path, version, manifest identity) — the
-    same immutable-manifest discipline as ``_manifest_field_fold``
-    (reads hit this fold several times per statement: live set, DV
-    map, pruning stats)."""
-    key = None
-    try:
-        st = os.stat(os.path.join(_log_path(path), f"{version:08d}.json"))
-        key = (
-            os.path.realpath(path), version, "#live",
-            st.st_ino, st.st_mtime_ns, st.st_size,
-        )
-        if key in _FOLD_CACHE:
-            return _FOLD_CACHE[key]
-    except OSError:
-        pass
-    out = _fold_live_uncached(path, version, versions)
-    if key is not None:
-        if len(_FOLD_CACHE) > 4096:
-            _FOLD_CACHE.clear()
-        _FOLD_CACHE[key] = out
-    return out
+    one exists. Cached (``_cached_fold``): reads hit this fold several
+    times per statement (live set, DV map, pruning stats)."""
+    return _cached_fold(
+        path, version, "#live", lambda: _fold_live_uncached(path, version)
+    )
 
 
-def _fold_live_uncached(
-    path: str, version: int, versions: list[int] | None = None
-) -> dict[str, dict]:
-    versions = versions if versions is not None else committed_versions(path)
+def _fold_live_uncached(path: str, version: int) -> dict[str, dict]:
     live: dict[str, dict] = {}
     start = 0
     for v in range(
@@ -773,13 +796,7 @@ def _fold_live_uncached(
                 live = json.load(f)
             start = v + 1
             break
-    for v in versions:
-        if v < start:
-            continue
-        if v > version:
-            break
-        with open(os.path.join(_log_path(path), f"{v:08d}.json")) as f:
-            manifest = json.load(f)
+    for _, manifest in _manifests(path, start - 1, version):
         for a in manifest["actions"]:
             if "add" in a:
                 live[a["add"]] = _action_info(a)
@@ -802,26 +819,8 @@ def _action_info(a: dict) -> dict:
     return info
 
 
-def _fold_live_raw(path: str, version: int) -> dict[str, dict]:
-    """Checkpoint-free fold of manifests 0..version — the ground
-    truth the checkpointed fold must equal (pinned in tests)."""
-    live: dict[str, dict] = {}
-    for v in committed_versions(path):
-        if v > version:
-            break
-        with open(os.path.join(_log_path(path), f"{v:08d}.json")) as f:
-            manifest = json.load(f)
-        for a in manifest["actions"]:
-            if "add" in a:
-                live[a["add"]] = _action_info(a)
-            elif "remove" in a:
-                live.pop(a["remove"], None)
-    return live
-
-
 def _manifest_ts(path: str, version: int) -> float:
-    with open(os.path.join(_log_path(path), f"{version:08d}.json")) as f:
-        return float(json.load(f).get("ts", 0.0))
+    return float(_manifest(path, version).get("ts", 0.0))
 
 
 def _as_epoch(timestamp) -> float:
@@ -879,10 +878,10 @@ def live_files(path: str, *, version: int | None = None) -> dict[str, int]:
     """Snapshot live set at ``version`` (latest if None) → {data file
     name: row count}. Metadata-only — a checkpointed fold of the
     action log; raises on an unknown version."""
-    version, versions = _resolve_version(path, version)
+    version, _ = _resolve_version(path, version)
     return {
         f: info["rows"]
-        for f, info in _fold_live(path, version, versions).items()
+        for f, info in _fold_live(path, version).items()
     }
 
 
@@ -897,8 +896,8 @@ def table_count(
     raises on legacy manifests that predate row counts rather than
     return a wrong number."""
     _require_reader(path)
-    version, versions = _resolve_version(path, version, timestamp=timestamp)
-    live = _fold_live(path, version, versions)
+    version, _ = _resolve_version(path, version, timestamp=timestamp)
+    live = _fold_live(path, version)
     if any(info["rows"] < 0 for info in live.values()):
         raise ValueError(
             f"manifests at {path} predate per-file row counts; "
@@ -918,8 +917,8 @@ def live_file_stats(
     subsequent reads at that snapshot until a cache reset."""
     import copy
 
-    version, versions = _resolve_version(path, version)
-    return copy.deepcopy(_fold_live(path, version, versions))
+    version, _ = _resolve_version(path, version)
+    return copy.deepcopy(_fold_live(path, version))
 
 
 def table_history(spark: SparkSession, path: str) -> DataFrame:
@@ -940,9 +939,7 @@ def table_history(spark: SparkSession, path: str) -> DataFrame:
     import datetime
 
     rows = []
-    for v in committed_versions(path):
-        with open(os.path.join(_log_path(path), f"{v:08d}.json")) as f:
-            manifest = json.load(f)
+    for v, manifest in _manifests(path, -1):
         acts = manifest["actions"]
         n_add = sum(1 for a in acts if "add" in a)
         n_rm = sum(1 for a in acts if "remove" in a)
@@ -969,11 +966,36 @@ def table_history(spark: SparkSession, path: str) -> DataFrame:
                 manifest.get("batch_id"),
             )
         )
-    return spark.createDataFrame(
+    return _local_frame(
+        spark,
         rows[::-1],
         "version long, ts timestamp, op string, files_added long, "
         "files_removed long, rows_written long, rows_deleted long, "
         "batch_id long",
+    )
+
+
+def _local_frame(
+    spark: SparkSession, rows: list[tuple], schema: str
+) -> DataFrame:
+    """A small driver-side frame of ``rows`` with the flat ``schema``
+    ("name type, ..." over long, string and timestamp columns). Built
+    from an arrow table it is a local relation: unlike
+    ``createDataFrame(rows, schema)``, which plans an RDD scan, it
+    needs no job to build or to scan."""
+    import pyarrow as pa
+
+    types = {
+        "long": pa.int64(),
+        "string": pa.string(),
+        "timestamp": pa.timestamp("us", tz="UTC"),
+    }
+    fields = [f.split() for f in schema.split(",")]
+    cols = list(zip(*rows)) or [()] * len(fields)
+    return spark.createDataFrame(
+        pa.table(
+            {n: pa.array(c, types[t]) for (n, t), c in zip(fields, cols)}
+        )
     )
 
 
@@ -1763,13 +1785,13 @@ def pruned_files(
     from .pruning import compile_where, may_match, rename_columns
 
     node, _ = compile_where(spark, where)
-    version, versions = _resolve_version(path, version, timestamp=timestamp)
+    version, _ = _resolve_version(path, version, timestamp=timestamp)
     mapping = table_mapping(path, version=version)
     if mapping:
         # predicates speak LOGICAL names, manifest stats PHYSICAL ones
         node = rename_columns(node, mapping)
     kept, pruned = [], []
-    for f, info in sorted(_fold_live(path, version, versions).items()):
+    for f, info in sorted(_fold_live(path, version).items()):
         (kept if may_match(node, info) else pruned).append(f)
     return kept, pruned
 
@@ -2309,8 +2331,8 @@ def _dv_commit(
         from ..operators.util import truncate_lineage
 
         matched = truncate_lineage(matched)
-        rel_df = spark.createDataFrame(
-            list(rel_by_base.items()), "_txb string, file string"
+        rel_df = _local_frame(
+            spark, list(rel_by_base.items()), "_txb string, file string"
         )
         new_pos = matched.select(
             "_txb", F.col("_txpos").alias("pos")
@@ -3125,7 +3147,8 @@ def merge_into(
             files_masked = 0
         else:  # dv: mask applied preimages, add postimages + inserts
             if touched:
-                rel_df = spark.createDataFrame(
+                rel_df = _local_frame(
+                    spark,
                     [(os.path.basename(f), f) for f in touched],
                     "_txb string, file string",
                 )
@@ -3275,7 +3298,8 @@ def compact(
         if len(small) < 2:
             return None
         bin_map = compaction_plan(
-            spark.createDataFrame(
+            _local_frame(
+                spark,
                 [(f, b, i) for i, (f, b) in enumerate(small)],
                 "file_id string, bytes long, order_key long",
             ),
@@ -3342,11 +3366,7 @@ def _cdf_plan(
     A stamped EMPTY change set (OPTIMIZE) is known data-invisible and,
     like a commit that touched no file, yields no entry."""
     out: list[tuple[int, str, list[str], list[str]]] = []
-    for v in committed_versions(path):
-        if v <= from_version or v > to_version:
-            continue
-        with open(os.path.join(_log_path(path), f"{v:08d}.json")) as f:
-            manifest = json.load(f)
+    for v, manifest in _manifests(path, from_version, to_version):
         if "cdf" in manifest:
             names = [e["name"] for e in manifest["cdf"]["files"]]
             if names:
@@ -3478,27 +3498,17 @@ def change_feed(
             )
     parts: list[DataFrame] = []
     if scans:
-        import pyarrow as pa
-
         # (file, version, change) per scanned file and commit; change
-        # is NULL for a change file, whose rows carry their own. From
-        # an arrow table it is a local relation: no job builds it
-        txb, ver, tag = zip(
-            *[
+        # is NULL for a change file, whose rows carry their own
+        tags = _local_frame(
+            spark,
+            [
                 (os.path.basename(f), v, None if k == "changes" else k)
                 for v, k, fs, _ in plan
                 if k != "diff"
                 for f in fs
-            ]
-        )
-        tags = spark.createDataFrame(
-            pa.table(
-                {
-                    "_txb": pa.array(txb, pa.string()),
-                    "_version": pa.array(ver, pa.int64()),
-                    "_tag": pa.array(tag, pa.string()),
-                }
-            )
+            ],
+            "_txb string, _version long, _tag string",
         )
         rows = _union_all(scans)
         parts.append(
@@ -3583,14 +3593,9 @@ def generate_change_files(spark: SparkSession, path: str) -> list[int]:
             )
         inserts, deletes = _commit_diff(spark, path, adds, removes, latest)
         cdf_files = _stage_change_data(deletes, inserts, path)
-        mpath = os.path.join(_log_path(path), f"{v:08d}.json")
-        with open(mpath) as f:
-            manifest = json.load(f)
-        manifest["cdf"] = {"files": cdf_files}
-        tmp = mpath + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, mpath)
+        _replace_manifest(
+            path, v, {**_manifest(path, v), "cdf": {"files": cdf_files}}
+        )
         stamped.append(v)
     return stamped
 
@@ -3606,8 +3611,7 @@ def commit_metrics(path: str, version: int | None = None) -> dict | None:
     files_rewritten : files_carried ratio IS the write-amplification
     number an operator watches."""
     version, _ = _resolve_version(path, version)
-    with open(os.path.join(_log_path(path), f"{version:08d}.json")) as f:
-        return json.load(f).get("metrics")
+    return _manifest(path, version).get("metrics")
 
 
 def describe_detail(path: str, *, version: int | None = None) -> dict:
@@ -3630,9 +3634,7 @@ def describe_detail(path: str, *, version: int | None = None) -> dict:
         n for i in fold.values() for n in i.get("dv", {}).get("files", [])
     }
     rows = sum(i["rows"] for i in fold.values() if i["rows"] >= 0)
-    with open(os.path.join(_log_path(path), "00000000.json")) as f:
-        v0 = json.load(f)
-    clone = (v0.get("metrics") or {})
+    clone = _manifest(path, 0).get("metrics") or {}
     from .constraints import table_constraints
 
     schema = _latest_schema(path, version)
@@ -3694,9 +3696,8 @@ def vacuum(
         reachable |= set(fold)
         for info in fold.values():  # deletion vectors of live files
             reachable |= set(info.get("dv", {}).get("files", []))
-    for v in versions[-keep_versions:]:
-        with open(os.path.join(_log_path(path), f"{v:08d}.json")) as f:
-            cdf = json.load(f).get("cdf")
+    for v in retained:
+        cdf = _manifest(path, v).get("cdf")
         if cdf:
             reachable |= {e["name"] for e in cdf.get("files", [])}
     removed = []

@@ -170,13 +170,7 @@ class TxlogStreamReader(DataSourceStreamReader):
             else self.starting_version
         )
         n_files, n_bytes, end = 0, 0, cursor
-        for v in versions:
-            if v <= cursor:
-                continue
-            with open(
-                os.path.join(self.path, txlog._LOG_DIR, f"{v:08d}.json")
-            ) as f:
-                manifest = json.load(f)
+        for v, manifest in txlog._manifests(self.path, cursor, versions[-1]):
             added = [a["add"] for a in manifest["actions"] if "add" in a]
             n_files += len(added)
             if self.max_bytes is not None:
@@ -217,13 +211,9 @@ class TxlogStreamReader(DataSourceStreamReader):
             )
             return out or [_FilePartition(self.path, "", self.schema_json)]
         out = []
-        for v in txlog.committed_versions(self.path):
-            if v <= start["version"] or v > end["version"]:
-                continue
-            with open(
-                os.path.join(self.path, txlog._LOG_DIR, f"{v:08d}.json")
-            ) as f:
-                manifest = json.load(f)
+        for v, manifest in txlog._manifests(
+            self.path, start["version"], end["version"]
+        ):
             removes = [a for a in manifest["actions"] if "remove" in a]
             if removes:
                 if self.skip_change_commits:

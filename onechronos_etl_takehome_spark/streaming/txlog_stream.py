@@ -28,9 +28,6 @@ checkpointing lever the module docstring of txlog.py documents).
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame
 
 from ..sources import txlog
@@ -38,15 +35,11 @@ from ..sources import txlog
 
 def committed_batch_ids(path: str) -> set[int]:
     """batch_ids already in the log (metadata fold, no data read)."""
-    out: set[int] = set()
-    for v in txlog.committed_versions(path):
-        with open(
-            os.path.join(path, txlog._LOG_DIR, f"{v:08d}.json")
-        ) as f:
-            manifest = json.load(f)
-        if "batch_id" in manifest:
-            out.add(manifest["batch_id"])
-    return out
+    return {
+        manifest["batch_id"]
+        for _, manifest in txlog._manifests(path, -1)
+        if "batch_id" in manifest
+    }
 
 
 def process_txlog_batch(

@@ -169,3 +169,63 @@ def test_batched_matmul_idct_is_bit_identical_to_per_block():
     deq = rng.rand(4000, 8, 8) * 2000.0 - 1000.0
     ref = np.stack([J._idct2(b) for b in deq])
     assert np.array_equal(ref, J._DCT.T @ deq @ J._DCT)
+
+
+def _one_block_planes(ac_codes: dict):
+    """One 8×8 grayscale block whose first AC coefficient is -3 at
+    zigzag k=1 (AC symbol 0x02), encoded with the Annex-K DC table and
+    ``ac_codes``."""
+    q = J._scaled_quant(J.QUANT_LUMA, None)
+    c = np.zeros((1, 1, 8, 8), np.int64)
+    flat = np.zeros(64, np.int64)
+    flat[J._ZIGZAG[1]] = -3
+    c[0, 0] = flat.reshape(8, 8)
+    plane = _px_from_coefs(c, q).astype(np.float64)
+    dc = J._build_code_table(J.DC_LUMA_BITS, J.DC_LUMA_VALS)
+    return plane, q, dc, ac_codes
+
+
+@pytest.mark.parametrize("missing", [0x02, 0x00])
+def test_fast_encode_raises_on_undefined_symbol_like_reference(missing):
+    """A code table lacking a symbol the block needs (here the (0, 2)
+    AC symbol, or EOB) makes the reference walk raise ``KeyError``;
+    the vectorized encoder must raise too, never emit a zero-length
+    code into a corrupt stream."""
+    ac = J._build_code_table(J.AC_LUMA_BITS, J.AC_LUMA_VALS)
+    del ac[missing]
+    plane, q, dc, ac = _one_block_planes(ac)
+    with pytest.raises(KeyError):
+        J._encode_block(J._BitWriter(), plane, q, dc, ac, 0)
+    with pytest.raises(KeyError):
+        J._encode_baseline_fast([(plane, q, dc, ac, (1, 1))], 0)
+
+
+def test_fast_encode_ignores_undefined_symbols_it_does_not_need():
+    """A symbol absent from the table but unused by the block (ZRL
+    here) raises on neither path, and both write the same bytes."""
+    ac = J._build_code_table(J.AC_LUMA_BITS, J.AC_LUMA_VALS)
+    del ac[0xF0]
+    plane, q, dc, ac = _one_block_planes(ac)
+    w = J._BitWriter()
+    J._encode_block(w, plane, q, dc, ac, 0)
+    assert J._encode_baseline_fast([(plane, q, dc, ac, (1, 1))], 0) == (
+        w.flush()
+    )
+
+
+def test_fast_decode_skips_fill_bytes_before_the_terminating_marker():
+    """FF fill bytes may precede any marker (T.81 B.1.1.2). Trailing the
+    last MCU, before EOI, the reference reader never reads them; the
+    fast scan must decode the same pixels, not reject the scan."""
+    rng = np.random.RandomState(5)
+    px = rng.randint(0, 256, (24, 40, 3)).astype(np.uint8)
+    for ri in (0, 2):
+        enc = J.jpeg_from_pixels(px, restart_interval=ri)
+        assert enc.endswith(b"\xff\xd9")
+        filled = enc[:-2] + b"\xff\xff\xff" + enc[-2:]
+        J._FAST_SCAN = False
+        ref = J.jpeg_pixels(filled)
+        J._FAST_SCAN = True
+        fast = J.jpeg_pixels(filled)
+        assert np.array_equal(fast, ref)
+        assert np.array_equal(fast, J.jpeg_pixels(enc))

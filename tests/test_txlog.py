@@ -31,6 +31,28 @@ def _df(spark, lo, hi, tag):
     )
 
 
+def _reference_fold(table, version) -> dict[str, dict]:
+    """Checkpoint-free fold of manifests 0..version, read straight from
+    the log files — the oracle the checkpointed ``_fold_live`` must
+    equal."""
+    log = os.path.join(table, txlog._LOG_DIR)
+    live: dict[str, dict] = {}
+    for v in range(version + 1):
+        with open(os.path.join(log, f"{v:08d}.json")) as f:
+            manifest = json.load(f)
+        for a in manifest["actions"]:
+            if "add" in a:
+                live[a["add"]] = {
+                    "rows": a.get("rows", -1),
+                    "stats": a.get("stats", {}),
+                    "nulls": a.get("nulls", {}),
+                    **{k: a[k] for k in ("partition", "dv") if k in a},
+                }
+            elif "remove" in a:
+                live.pop(a["remove"], None)
+    return live
+
+
 class TestCommitProtocol:
     def test_create_append_versions(self, spark, table):
         assert txlog.create_table(_df(spark, 0, 10, "a"), table) == 0
@@ -459,7 +481,7 @@ class TestMaintenance:
         for v in range(8):
             assert txlog.live_file_stats(
                 table, version=v
-            ) == txlog._fold_live_raw(table, v), v
+            ) == _reference_fold(table, v), v
         assert txlog.read_table(spark, table).count() == 40
 
     def test_checkpoint_loss_is_harmless(self, spark, table, monkeypatch):
@@ -921,6 +943,85 @@ class TestCommitLoop:
             ]
         assert offenders == []
 
+    def test_log_layout_is_owned_by_txlog(self):
+        """Only ``sources/txlog.py`` knows where manifests live: no
+        other module names the log directory or its path helpers or
+        formats a ``:08d`` version file name, and no function outside
+        it ``json.load``s the files of a version walk — they go through
+        ``_manifest``/``_manifests``/``_replace_manifest``."""
+        import ast
+        import pathlib
+
+        import onechronos_etl_takehome_spark as pkg
+
+        layout = {"_LOG_DIR", "_log_path", "_checkpoint_path"}
+
+        def named(n, names) -> bool:
+            return (
+                (isinstance(n, ast.Attribute) and n.attr in names)
+                or (isinstance(n, ast.Name) and n.id in names)
+                or (isinstance(n, ast.alias) and n.name in names)
+            )
+
+        def knows_layout(n) -> bool:
+            return (
+                named(n, layout)
+                or (isinstance(n, ast.Constant) and n.value == "_txlog")
+                or (
+                    isinstance(n, ast.FormattedValue)
+                    and n.format_spec is not None
+                    and "08d" in ast.unparse(n.format_spec)
+                )
+            )
+
+        def json_load(n) -> bool:
+            return isinstance(n, ast.Call) and ast.unparse(n.func) in (
+                "json.load", "load",
+            )
+
+        root = pathlib.Path(pkg.__file__).parent
+        offenders = []
+        for src in sorted(root.rglob("*.py")):
+            rel = src.relative_to(root).as_posix()
+            if rel == "sources/txlog.py":
+                continue
+            tree = ast.parse(src.read_text())
+            if any(map(knows_layout, ast.walk(tree))):
+                offenders.append(rel)
+            offenders += [
+                f"{rel}::{fn.name}"
+                for fn in ast.walk(tree)
+                if isinstance(fn, ast.FunctionDef)
+                and any(map(json_load, ast.walk(fn)))
+                and any(named(n, {"committed_versions"}) for n in ast.walk(fn))
+            ]
+        assert offenders == []
+
+    def test_repeat_constraint_lookup_reads_no_manifest(
+        self, spark, table, monkeypatch
+    ):
+        """``table_constraints`` is the cached carry-forward fold: on an
+        unchanged table a repeat lookup opens no manifest."""
+        txlog.create_table(_kv(spark, 0, 10), table)
+        C.add_constraint(spark, table, "k_nonneg", "k >= 0")
+        for _ in range(28):  # commits that carry no constraints field
+            txlog._transact(table, "no-op", lambda base: ([], None))
+        assert len(txlog.committed_versions(table)) == 30
+        assert C.table_constraints(table) == {"k_nonneg": "k >= 0"}
+        reads = []
+        manifest = txlog._manifest
+
+        def counted(path, version):
+            reads.append(version)
+            return manifest(path, version)
+
+        monkeypatch.setattr(txlog, "_manifest", counted)
+        assert C.table_constraints(table) == {"k_nonneg": "k >= 0"}
+        assert reads == []
+        C.drop_constraint(spark, table, "k_nonneg")  # a new head: re-fold
+        assert C.table_constraints(table) == {}
+        assert C.table_constraints(table, version=29) == {"k_nonneg": "k >= 0"}
+
 
 # ---------------------------------------------------------------------------
 # Schemas from the log: reads take the manifest's physical schema instead
@@ -973,6 +1074,41 @@ class TestSchemaFromLog:
         txlog.delete_where(spark, table, (F.col("k") >= 5) & (F.col("k") < 10))
         txlog.delete_where(spark, table, F.col("k") == 0)
         txlog.delete_where(spark, table, F.col("k") == 3, mode="dv")
+
+    def test_table_history_starts_no_job(self, spark, table):
+        """The history is a local relation: neither building it nor
+        collecting it runs a job (a frame from a Python list is an RDD
+        scan, one job per action)."""
+        self._dml_history(spark, table)
+        assert _jobs_started_by(
+            spark, lambda: txlog.table_history(spark, table).collect()
+        ) == 0
+        hist = txlog.table_history(spark, table)
+        assert _names_types(hist) == [
+            ("version", "bigint"), ("ts", "timestamp"), ("op", "string"),
+            ("files_added", "bigint"), ("files_removed", "bigint"),
+            ("rows_written", "bigint"), ("rows_deleted", "bigint"),
+            ("batch_id", "bigint"),
+        ]
+        import datetime
+
+        epoch = datetime.datetime.fromtimestamp(0, datetime.timezone.utc)
+        log = os.path.join(table, txlog._LOG_DIR)
+        micros = {}
+        for v in txlog.committed_versions(table):
+            with open(os.path.join(log, f"{v:08d}.json")) as f:
+                at = datetime.datetime.fromtimestamp(
+                    json.load(f)["ts"], datetime.timezone.utc
+                )
+            micros[v] = (at - epoch) // datetime.timedelta(microseconds=1)
+        got = hist.select("version", F.unix_micros("ts"), "op").collect()
+        assert [tuple(r) for r in got] == [
+            (v, micros[v], op)
+            for v, op in [
+                (4, "delete-dv"), (3, "delete"), (2, "delete"),
+                (1, "merge-into"), (0, "create"),
+            ]
+        ]
 
     def test_building_reads_starts_no_job(self, spark, table):
         self._dml_history(spark, table)
