@@ -98,7 +98,9 @@ def validate_staged(
         # directory names; basePath restores them so a constraint on a
         # partition column validates against real values, not NULLs
         reader = reader.option("basePath", path)
-    df = reader.parquet(*[os.path.join(path, f) for f in staged_files])
+    df = txlog._parquet_scan(
+        reader, [os.path.join(path, f) for f in staged_files]
+    )
     # column-mapped tables stage under PHYSICAL names; constraints
     # speak logical — alias back before counting
     mapping = txlog.table_mapping(path)

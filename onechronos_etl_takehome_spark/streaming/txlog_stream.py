@@ -3,8 +3,11 @@ batch-id idempotence in the commit log.
 
 The streaming twin of x34 (sources/txlog.py): a ``foreachBatch`` sink
 that lands each microbatch as an append COMMIT whose manifest carries
-the batch_id. Structured Streaming's failure contract is at-least-
-once delivery into foreachBatch — after a crash between "data
+the batch_id — committed by the format writer's ``_commit_write``
+(streaming/txlog_writer.py), so it carries the schema and metrics
+too, and a table the sink creates reads like any other. Structured
+Streaming's failure contract is at-least-once delivery into
+foreachBatch — after a crash between "data
 written" and "checkpoint advanced", the SAME batch_id is replayed —
 so the sink makes the commit the deduplication point: before
 appending, it folds the committed manifests' batch_ids (metadata-only,
@@ -31,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from ..sources import txlog
+from .txlog_writer import TxlogWriteMessage, _commit_write
 
 
 def committed_batch_ids(path: str) -> set[int]:
@@ -48,9 +52,9 @@ def process_txlog_batch(
     """Idempotent append of one microbatch; returns the committed
     version, or None when the batch_id already landed (replay)."""
     if batch_id in committed_batch_ids(path):
-        return None
+        return None  # replay: stage nothing
     txlog._require_writer(path)
-    adds = txlog._add_actions(txlog._stage_data(batch_df, path))
+    staged = txlog._stage_data(batch_df, path)
     if txlog.committed_versions(path):  # batch 0 may CREATE the table
         from ..sources.constraints import table_constraints, validate_staged
 
@@ -59,19 +63,14 @@ def process_txlog_batch(
         # hatch is dropping the constraint), staged files unlinked,
         # nothing lands
         validate_staged(
-            batch_df.sparkSession, path, [a["add"] for a in adds],
+            batch_df.sparkSession, path, [f for f, *_ in staged],
             table_constraints(path),
         )
-
-    def plan(base: int):
-        # losing a version race can mean a concurrent replay of the
-        # SAME batch landed — re-check before retrying the link
-        if batch_id in committed_batch_ids(path):
-            return None
-        return adds, {"batch_id": batch_id}
-
-    return txlog._transact(
-        path, f"stream-append (batch {batch_id})", plan, create=True
+    # the format writer's commit: the manifest carries the schema and
+    # metrics, and its plan re-checks the batch_id on every attempt
+    return _commit_write(
+        path, batch_df.schema.json(), [TxlogWriteMessage(staged)],
+        overwrite=False, batch_id=batch_id,
     )
 
 

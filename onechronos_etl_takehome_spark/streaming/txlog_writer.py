@@ -60,8 +60,9 @@ from ..sources import txlog
 
 
 class TxlogWriteMessage(WriterCommitMessage):
-    """One task's adds: [(fname, rows, stats, nulls)] — the exact
-    tuple shape ``txlog._add_actions`` turns into manifest actions."""
+    """One task's adds: [(fname, rows, stats, nulls)] — the tuple
+    shape ``txlog._add_actions`` turns into manifest actions (the
+    stream sink's ``_stage_data`` tuples add partition values)."""
 
     def __init__(self, adds):
         self.adds = adds
@@ -166,7 +167,7 @@ def _commit_write(
     schema = StructType.fromJson(json.loads(schema_json))
     adds = [a for m in messages if m is not None for a in m.adds]
     add_actions = txlog._add_actions(adds)
-    rows_written = sum(n for _, n, _, _ in adds)
+    rows_written = sum(n for _, n, *_ in adds)
     # protocol gate: refuse feature-newer tables BEFORE committing
     # (the staged task files then unlink via the abort path contract)
     txlog._require_writer(path)
@@ -204,7 +205,8 @@ def _commit_write(
             extra["batch_id"] = batch_id
         return actions, extra
 
-    return txlog._transact(path, "write", plan, create=True)
+    op = "write" if batch_id is None else f"stream-append (batch {batch_id})"
+    return txlog._transact(path, op, plan, create=True)
 
 
 class TxlogBatchWriter(DataSourceArrowWriter):

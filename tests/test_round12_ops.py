@@ -60,7 +60,7 @@ class TestDvMaskMixedSpellings:
         assert mask == [True, False, True, False, True]
         # dir-qualified relative spelling (partitioned non-clone
         # table): the DV writer stores the manifest-relative name
-        # (txlog._dv_commit maps basename → manifest path), so the
+        # (txlog._dml_plan maps basename → manifest path), so the
         # exact-name pushdown is complete — round-12 advice restored
         # it after the base==fname gate regressed these reads to full
         # vector scans

@@ -408,6 +408,23 @@ class TestChangeFeed:
         got = {(r["_change"], r["id"], r["tag"]) for r in feed}
         assert got == {("delete", 3, "old"), ("insert", 3, "upd")}
 
+    def test_upsert_of_an_equal_row_shows_delete_plus_insert(
+        self, spark, table
+    ):
+        """A replaced row is a delete and its update row an insert,
+        even when both are equal — the pair UPDATE and merge_into
+        show too."""
+        txlog.create_table(_df(spark, 0, 3, "old"), table)
+        same = spark.createDataFrame([(1, "old")], "id long, tag string")
+        txlog.merge_upsert(spark, table, same, ["id"])
+        feed = txlog.change_feed(spark, table, from_version=0).collect()
+        assert sorted((r["_change"], r["id"], r["tag"]) for r in feed) == [
+            ("delete", 1, "old"), ("insert", 1, "old"),
+        ]
+        assert _rows(txlog.read_table(spark, table)) == [
+            (0, "old"), (1, "old"), (2, "old"),
+        ]
+
     def test_compaction_is_cdf_invisible(self, spark, table):
         txlog.create_table(_df(spark, 0, 10, "a"), table)
         for v in range(1, 4):
@@ -518,6 +535,38 @@ class TestCompaction:
     def test_compact_noop_when_nothing_qualifies(self, spark, table):
         txlog.create_table(_df(spark, 0, 10, "a"), table)
         assert txlog.compact(spark, table, target_bytes=1) is None
+
+    def test_compaction_repeats_byte_for_byte(self, spark, tmp_path):
+        """Compaction bins and reads the live files in commit order, so
+        a repeated history compacts to the same bytes: 16 five-row
+        files, most of equal size, whose random names must not pick
+        the row order of the rewrite."""
+        import hashlib
+
+        def history(path) -> tuple:
+            def rows(lo):
+                return spark.range(lo, lo + 40, numPartitions=8).select(
+                    F.col("id").alias("k"),
+                    F.when(F.floor(F.col("id") / 10) % 2 == 0, "even")
+                    .otherwise("odd")
+                    .alias("tag"),
+                )
+
+            txlog.create_table(rows(0), path)
+            txlog.append(rows(40), path)
+            txlog.delete_where(spark, path, F.col("k") == 3)
+            txlog.compact(spark, path, target_bytes=64 * 1024 * 1024)
+            digests = [
+                hashlib.sha256(
+                    open(os.path.join(path, f), "rb").read()
+                ).hexdigest()
+                for f in txlog.live_files(path)
+            ]
+            return txlog.describe_detail(path)["size_bytes"], digests
+
+        first = history(str(tmp_path / "one"))
+        assert len(first[1]) == 1
+        assert history(str(tmp_path / "two")) == first
 
 
 class TestRound8Hardening:
@@ -943,6 +992,35 @@ class TestCommitLoop:
             ]
         assert offenders == []
 
+    def test_dml_steps_belong_to_the_one_planner(self):
+        """``_touched_files``, ``_per_file_scan`` and
+        ``_dv_mask_actions`` each have one caller, ``_dml_plan``: every
+        DELETE, UPDATE and MERGE, in both modes, plans through it."""
+        import ast
+        import pathlib
+
+        import onechronos_etl_takehome_spark as pkg
+
+        steps = {"_touched_files", "_per_file_scan", "_dv_mask_actions"}
+        root = pathlib.Path(pkg.__file__).parent
+        callers: dict[str, set] = {name: set() for name in steps}
+        for src in sorted(root.rglob("*.py")):
+            rel = src.relative_to(root).as_posix()
+            for top in ast.parse(src.read_text()).body:
+                for n in ast.walk(top):
+                    name = (
+                        n.id if isinstance(n, ast.Name)
+                        else n.attr if isinstance(n, ast.Attribute)
+                        else None
+                    )
+                    if name in steps:
+                        callers[name].add(
+                            f"{rel}::{getattr(top, 'name', '<module>')}"
+                        )
+        assert callers == {
+            name: {"sources/txlog.py::_dml_plan"} for name in steps
+        }
+
     def test_log_layout_is_owned_by_txlog(self):
         """Only ``sources/txlog.py`` knows where manifests live: no
         other module names the log directory or its path helpers or
@@ -1114,6 +1192,12 @@ class TestSchemaFromLog:
         self._dml_history(spark, table)
         head = txlog.committed_versions(table)[-1]
         assert txlog.commit_metrics(table, 2)["files_added"] == 0
+        # past 32 paths Spark would list the files with a job
+        wide = table + "_wide"
+        txlog.create_table(_kv(spark, 0, 80, parts=40), wide)
+        txlog.append(_kv(spark, 80, 160, parts=40), wide)
+        txlog.delete_where(spark, wide, F.col("k") % 2 == 0, mode="dv")
+        assert len(txlog.live_files(wide)) == 80
         builders = {
             "read_table": lambda: txlog.read_table(spark, table),
             "read_table_where": lambda: txlog.read_table(
@@ -1127,6 +1211,13 @@ class TestSchemaFromLog:
             ),
             "provenance_view": lambda: txlog._provenance_view(
                 spark, table, txlog.live_files(table), head, with_pos=True
+            ),
+            "read_table_80_files": lambda: txlog.read_table(spark, wide),
+            "change_feed_80_files": lambda: txlog.change_feed(
+                spark, wide, from_version=0
+            ),
+            "provenance_view_80_files": lambda: txlog._provenance_view(
+                spark, wide, txlog.live_files(wide), 2, with_pos=True
             ),
         }
         started = {
@@ -1461,3 +1552,249 @@ class TestTimestampConfPerSession:
         assert txlog._CONF_HOLDS == {}
         assert sessions[0].conf.get(key) == "INT96"
         assert sessions[1].conf.get(key) == "TIMESTAMP_MILLIS"
+
+
+# ---------------------------------------------------------------------------
+# The one DML planner (txlog._dml_plan): a scripted sequence of every
+# statement in both modes, pinned commit by commit
+# ---------------------------------------------------------------------------
+
+
+def _dml_script(spark, root):
+    """(table, statement) steps over an unpartitioned table ``a``
+    (NULL-valued predicate columns, DV-masked files, an evolved
+    schema, a pure-remove delete, a no-match delete, an all-rows-die
+    delete across DV-masked files) and a table ``b`` partitioned by
+    ``p``. Every frame is built with a fixed partition count."""
+    a, b = os.path.join(root, "a"), os.path.join(root, "b")
+    txlog.create_table(
+        spark.range(0, 12, numPartitions=3).select(
+            F.col("id").alias("k"),
+            F.when(F.col("id") % 5 != 4, F.col("id") * 10).alias("v"),
+            F.when(F.col("id") % 3 == 0, "a")
+            .when(F.col("id") % 3 == 1, "b")
+            .alias("tag"),
+        ),
+        a,
+    )
+    txlog.create_table(
+        spark.range(0, 10, numPartitions=2).select(
+            F.col("id").alias("k"),
+            F.when(F.col("id") < 5, "x").otherwise("y").alias("p"),
+            (F.col("id") * 10).alias("v"),
+        ),
+        b,
+        partition_by="p",
+    )
+
+    def src(rows, schema):
+        return spark.createDataFrame(rows, schema).coalesce(1)
+
+    def merge(path, rows, schema, clauses, mode="cow"):
+        return lambda: txlog.merge_into(
+            spark, path, src(rows, schema), ["k"], clauses=clauses,
+            mode=mode,
+        )
+
+    a_clauses = [
+        {"when": "matched", "action": "delete", "condition": "s.op = 'D'"},
+        {"when": "matched", "action": "update", "set": {"v": "s.v"}},
+    ]
+    return [
+        (a, lambda: txlog.delete_where(
+            spark, a, (F.col("tag") == "a") & (F.col("k") < 4))),
+        (a, lambda: txlog.delete_where(
+            spark, a, (F.col("tag") == "b") & (F.col("k") >= 4), mode="dv")),
+        (a, lambda: txlog.update_where(
+            spark, a, F.col("k") == 5, {"v": "v + 100"}, mode="dv")),
+        (a, lambda: txlog.update_where(
+            spark, a, F.col("v") >= 60, {"tag": "'u'"})),
+        (a, lambda: txlog.merge_upsert(
+            spark, a,
+            src([(1, 11, "m", "w1"), (20, 200, "n", "w2")],
+                "k long, v long, tag string, w string"),
+            ["k"])),
+        (a, merge(
+            a, [(2, "U", 22), (6, "D", 0), (30, "I", 300)],
+            "k long, op string, v long",
+            [a_clauses[0],
+             {**a_clauses[1], "set": {"v": "s.v", "w": "'mi'"}},
+             {"when": "not_matched", "action": "insert",
+              "values": {"k": "s.k", "v": "s.v", "tag": "s.op"}}])),
+        (a, merge(
+            a, [(8, "U", 88), (11, "D", 0), (31, "I", 310)],
+            "k long, op string, v long",
+            a_clauses + [
+                {"when": "not_matched", "action": "insert", "values": None}
+            ],
+            mode="dv")),
+        (a, lambda: txlog.append(
+            spark.range(100, 104, numPartitions=1).select(
+                F.col("id").alias("k"), F.col("id").alias("v"),
+                F.lit("x").alias("tag"),
+                F.lit(None).cast("string").alias("w"),
+            ),
+            a)),
+        (a, lambda: txlog.delete_where(spark, a, F.col("k") >= 100)),
+        (a, lambda: txlog.delete_where(spark, a, F.col("k") == 999)),
+        (a, lambda: txlog.delete_where(spark, a, F.lit(True))),
+        (b, lambda: txlog.delete_where(spark, b, F.col("k") == 1)),
+        (b, lambda: txlog.delete_where(spark, b, F.col("k") == 7, mode="dv")),
+        (b, lambda: txlog.update_where(spark, b, F.col("k") == 2, {"p": "'y'"})),
+        (b, lambda: txlog.update_where(
+            spark, b, F.col("k") == 8, {"v": "-v"}, mode="dv")),
+        (b, lambda: txlog.merge_upsert(
+            spark, b,
+            src([(4, "x", 44), (12, "y", 120)], "k long, p string, v long"),
+            ["k"])),
+        (b, merge(
+            b, [(3, 33), (6, 66), (13, 130)], "k long, v long",
+            [{"when": "matched", "action": "update", "condition": "s.k = 3",
+              "set": {"v": "s.v"}},
+             {"when": "matched", "action": "delete"},
+             {"when": "not_matched", "action": "insert",
+              "values": {"k": "s.k", "p": "'x'", "v": "s.v"}}])),
+        (b, merge(
+            b, [(0, 1), (9, 99), (14, 140)], "k long, v long",
+            [{"when": "matched", "action": "update",
+              "set": {"v": "s.v + t.v"}},
+             {"when": "not_matched", "action": "insert",
+              "values": {"k": "s.k", "p": "'y'", "v": "s.v"}},
+             {"when": "not_matched_by_source", "action": "delete",
+              "condition": "t.k = 5"}],
+            mode="dv")),
+    ]
+
+
+# per commit: metrics, (remove actions, add actions, live files kept
+# from the previous version), and the change rows (_change, *columns)
+_DML_SCRIPT_COMMITS = [
+    ({"op": "delete", "files_removed": 1, "files_added": 1,
+      "files_carried": 2, "rows_deleted": 2, "rows_rewritten": 2},
+     (1, 1, 2), [("delete", 0, 0, "a"), ("delete", 3, 30, "a")]),
+    ({"op": "delete-dv", "files_masked": 2, "files_carried": 1,
+      "rows_deleted": 3, "files_added": 0, "files_removed": 0},
+     (2, 2, 3),
+     [("delete", 10, 100, "b"), ("delete", 4, None, "b"),
+      ("delete", 7, 70, "b")]),
+    ({"op": "update-dv", "files_masked": 1, "files_carried": 2,
+      "rows_updated": 1, "files_added": 1, "files_removed": 0},
+     (1, 2, 3), [("delete", 5, 50, None), ("insert", 5, 150, None)]),
+    ({"op": "update", "files_removed": 3, "files_added": 3,
+      "files_carried": 1, "rows_updated": 4},
+     (3, 3, 1),
+     [("delete", 11, 110, None), ("delete", 5, 150, None),
+      ("delete", 6, 60, "a"), ("delete", 8, 80, None),
+      ("insert", 11, 110, "u"), ("insert", 5, 150, "u"),
+      ("insert", 6, 60, "u"), ("insert", 8, 80, "u")]),
+    ({"op": "merge", "files_removed": 1, "files_added": 2,
+      "files_carried": 3, "rows_replaced": 1, "rows_rewritten": 1,
+      "rows_upserted": 2},
+     (1, 2, 3),
+     [("delete", 1, 10, "b", None), ("insert", 1, 11, "m", "w1"),
+      ("insert", 20, 200, "n", "w2")]),
+    ({"op": "merge-into", "files_removed": 2, "files_masked": 0,
+      "files_added": 2, "files_carried": 3, "rows_updated": 1,
+      "rows_deleted": 1, "rows_inserted": 1},
+     (2, 2, 3),
+     [("delete", 2, 20, None, None), ("delete", 6, 60, "u", None),
+      ("insert", 2, 22, None, "mi"), ("insert", 30, 300, "I", None)]),
+    # the postimage and the insert stage from separate partitions
+    ({"op": "merge-into-dv", "files_removed": 0, "files_masked": 1,
+      "files_added": 2, "files_carried": 4, "rows_updated": 1,
+      "rows_deleted": 1, "rows_inserted": 1},
+     (1, 3, 5),
+     [("delete", 11, 110, "u", None), ("delete", 8, 80, "u", None),
+      ("insert", 31, 310, None, None), ("insert", 8, 88, "u", None)]),
+    ({"op": "append", "files_added": 1, "rows_written": 4},
+     (0, 1, 7),
+     [("insert", k, k, "x", None) for k in range(100, 104)]),
+    # a pure remove: its change rows are the removed file's rows
+    ({"op": "delete", "files_removed": 1, "files_added": 0,
+      "files_carried": 7, "rows_deleted": 4, "rows_rewritten": 0},
+     (1, 0, 7),
+     [("delete", k, k, "x", None) for k in range(100, 104)]),
+    ({"op": "delete", "files_removed": 0, "files_added": 0,
+      "files_carried": 7, "rows_deleted": 0, "rows_rewritten": 0},
+     (0, 0, 7), []),
+    ({"op": "delete", "files_removed": 7, "files_added": 0,
+      "files_carried": 0, "rows_deleted": 8, "rows_rewritten": 0},
+     (7, 0, 0),
+     [("delete", 1, 11, "m", "w1"), ("delete", 2, 22, None, "mi"),
+      ("delete", 20, 200, "n", "w2"), ("delete", 30, 300, "I", None),
+      ("delete", 31, 310, None, None), ("delete", 5, 150, "u", None),
+      ("delete", 8, 88, "u", None), ("delete", 9, None, "a", None)]),
+    ({"op": "delete", "files_removed": 1, "files_added": 1,
+      "files_carried": 1, "rows_deleted": 1, "rows_rewritten": 4},
+     (1, 1, 1), [("delete", 1, "x", 10)]),
+    ({"op": "delete-dv", "files_masked": 1, "files_carried": 1,
+      "rows_deleted": 1, "files_added": 0, "files_removed": 0},
+     (1, 1, 2), [("delete", 7, "y", 70)]),
+    ({"op": "update", "files_removed": 1, "files_added": 2,
+      "files_carried": 1, "rows_updated": 1},
+     (1, 2, 1), [("delete", 2, "x", 20), ("insert", 2, "y", 20)]),
+    ({"op": "update-dv", "files_masked": 1, "files_carried": 2,
+      "rows_updated": 1, "files_added": 1, "files_removed": 0},
+     (1, 2, 3), [("delete", 8, "y", 80), ("insert", 8, "y", -80)]),
+    ({"op": "merge", "files_removed": 1, "files_added": 3,
+      "files_carried": 3, "rows_replaced": 1, "rows_rewritten": 2,
+      "rows_upserted": 2},
+     (1, 3, 3),
+     [("delete", 4, "x", 40), ("insert", 12, "y", 120),
+      ("insert", 4, "x", 44)]),
+    ({"op": "merge-into", "files_removed": 2, "files_masked": 0,
+      "files_added": 3, "files_carried": 4, "rows_updated": 1,
+      "rows_deleted": 1, "rows_inserted": 1},
+     (2, 3, 4),
+     [("delete", 3, "x", 30), ("delete", 6, "y", 60),
+      ("insert", 13, "x", 130), ("insert", 3, "x", 33)]),
+    ({"op": "merge-into-dv", "files_removed": 0, "files_masked": 2,
+      "files_added": 3, "files_carried": 5, "rows_updated": 2,
+      "rows_deleted": 1, "rows_inserted": 1},
+     (2, 4, 6),
+     [("delete", 0, "x", 0), ("delete", 5, "y", 50),
+      ("delete", 9, "y", 90), ("insert", 0, "x", 1),
+      ("insert", 14, "y", 140), ("insert", 9, "y", 189)]),
+]
+
+
+class TestDmlPlanner:
+    def test_scripted_sequence(self, spark, tmp_path):
+        """Per commit of the script: op and metrics, removed / added /
+        carried files, the change-row multiset, and the read-back rows,
+        which must equal the previous read-back with the change rows
+        applied."""
+        steps = _dml_script(spark, str(tmp_path))
+        assert len(steps) == len(_DML_SCRIPT_COMMITS)
+        state = {
+            path: _rows(txlog.read_table(spark, path))
+            for path in {p for p, _ in steps}
+        }
+        for (path, step), (metrics, files, changes) in zip(
+            steps, _DML_SCRIPT_COMMITS
+        ):
+            v = step()
+            acts = txlog._manifest(path, v)["actions"]
+            before = set(txlog.live_files(path, version=v - 1))
+            got_files = (
+                sum("remove" in a for a in acts),
+                sum("add" in a for a in acts),
+                len(before & set(txlog.live_files(path, version=v))),
+            )
+            feed = txlog.change_feed(
+                spark, path, from_version=v - 1, to_version=v
+            ).collect()
+            got_changes = sorted((tuple(r)[1:] for r in feed), key=repr)
+            assert (txlog.commit_metrics(path, v), got_files, got_changes) == (
+                metrics, files, sorted(changes, key=repr)
+            ), (path, v)
+            # an evolved column reads NULL in older rows
+            width = len(txlog.read_table(spark, path).columns)
+            rows = [r + (None,) * (width - len(r)) for r in state[path]]
+            for change, *row in changes:
+                if change == "delete":
+                    rows.remove(tuple(row))
+                else:
+                    rows.append(tuple(row))
+            state[path] = _rows(txlog.read_table(spark, path))
+            assert state[path] == sorted(rows), (path, v)

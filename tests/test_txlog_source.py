@@ -190,3 +190,20 @@ def test_batch_read_time_travel_schema_as_of_version(spark, table):
     assert set(v1.columns) == {"id", "tag", "score"}
     rows = {r["id"]: r for r in v1.collect()}
     assert rows[0]["score"] is None and rows[4]["score"] == 1.5
+
+
+def test_stream_sink_table_reads_batch_and_streaming(spark, table, tmp_path):
+    """A table the foreachBatch sink creates records its schema, so
+    the data source reads it in batch and as a stream."""
+    from onechronos_etl_takehome_spark.streaming.txlog_stream import (
+        process_txlog_batch,
+    )
+
+    _register(spark)
+    assert process_txlog_batch(_df(spark, 0, 3, "a"), 0, table) == 0
+    assert process_txlog_batch(_df(spark, 3, 5, "b"), 1, table) == 1
+    want = [(0, "a"), (1, "a"), (2, "a"), (3, "b"), (4, "b")]
+    batch = spark.read.format("txlog").option("path", table).load()
+    assert sorted(tuple(r) for r in batch.collect()) == want
+    got = _drain(spark, table, str(tmp_path / "ck"), str(tmp_path / "out"))
+    assert sorted((r["id"], r["tag"]) for r in got.collect()) == want
