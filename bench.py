@@ -850,7 +850,7 @@ def main() -> None:
                 df.write.format("noop").mode("overwrite").save()
                 best = min(best, time.perf_counter() - t0)
                 if capture and sink:
-                    candidate_counts[label] = sum(drain(sink).values())
+                    candidate_counts[label] = sum(v["n"] for v in drain(sink).values())
             if rep >= 1 and best >= 8.0:
                 break
         run_spec[label] = (name, data_dir)

@@ -6,7 +6,7 @@ collapsed) → deterministic hash split → partitioned parquet by split.
 
 Design mirrors the reconciliation pipeline's execution discipline:
 - one cached frame at the survivor stage, Observation-based counters
-  (no extra count scans);
+  through observability.py (no extra count scans);
 - every stage is a pure DataFrame transform — at 100 TB the only
   driver-side data is the metrics dict;
 - the split is content-hash based (md5 of the id), so membership is
@@ -16,9 +16,10 @@ Design mirrors the reconciliation pipeline's execution discipline:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..observability import capture_counts, drain, observe_count
 from ..operators import dedup as dd
 from ..operators import text as tx
 from ..sources.sinks import write_parquet
@@ -125,14 +126,14 @@ def prepare_corpus(
     Observation except the component loop's own convergence counts).
     With ``benchmark`` set, docs overlapping the eval set beyond
     ``max_contamination`` are dropped after dedup."""
-    obs_in = Observation("corpus_in")
-    docs = docs.observe(obs_in, F.count(F.lit(1)).alias("n"))
-
-    filtered = quality_filter(
-        docs, text_col=text_col, min_tokens=min_tokens, min_diversity=min_diversity
-    )
-    obs_q = Observation("corpus_quality")
-    filtered = filtered.observe(obs_q, F.count(F.lit(1)).alias("n"))
+    # the capture covers the two counts read here, so a caller's own
+    # capture still receives the near-dup operators' candidate counts
+    with capture_counts() as counts:
+        docs = observe_count("docs_in", docs)
+        filtered = quality_filter(
+            docs, text_col=text_col, min_tokens=min_tokens, min_diversity=min_diversity
+        )
+        filtered = observe_count("after_quality", filtered)
 
     exact = dd.deterministic_dedup(
         filtered, [text_col], [F.col(id_col)]
@@ -160,8 +161,7 @@ def prepare_corpus(
         }
         write_parquet(out, output_dir, partition_by=["split"])
         return {
-            "docs_in": int(obs_in.get["n"]),
-            "after_quality": int(obs_q.get["n"]),
+            **{tag: int(v["n"]) for tag, v in drain(counts).items()},
             "after_dedup": sum(split_counts.values()),
             **{f"split_{k}": int(v) for k, v in split_counts.items()},
         }

@@ -5,10 +5,12 @@ Q1-Q7 per SURVEY.md §2.9), different execution design:
 
 - **2 actions instead of 14.** The reference fires 12 counts + 2
   collects with no caching, re-running the CSV scans and joins ~10×
-  (SURVEY.md §4.3). Here every count is an ``Observation``: the stage
+  (SURVEY.md §4.3). Here every count is an ``Observation``
+  (observability.py, under the capture ``run()`` opens): the stage
   counts on the single lineage, the valid/invalid/discrepancy split on
   the two sink projections. The validated frame is cached once and
-  the two writes, run side by side, are the whole run.
+  the two writes, run side by side, are the whole run. ``transform()``
+  called outside ``run()`` attaches no observation.
 - **A cache sized by the data.** The cache holds the dedup shuffle's
   output, and every sink task reads one of its partitions. The session
   lets AQE coalesce that shuffle inside the cache
@@ -46,14 +48,17 @@ them byte-for-byte (tests/test_reference_parity.py does).
 
 from __future__ import annotations
 
+import contextlib
 import os
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..observability import capture_counts, drain, observe_count
 from ..operators.dedup import deterministic_dedup
 from ..operators.util import side_by_side
+from ..session import conf_hold
 from ..sources.readers import read_dirty_csv
 from ..sources.sinks import write_json
 from . import rules
@@ -203,14 +208,8 @@ class ReconciliationPipeline:
             if spark.conf.get(k, None) != v:
                 spark.conf.set(k, v)
         self.metrics: dict[str, int] = {}
-        self._observations: dict[str, Observation] = {}
 
     # -- extract ----------------------------------------------------------
-
-    def _observe_count(self, df: DataFrame, name: str, *extra: Column) -> DataFrame:
-        obs = Observation(name)
-        self._observations[name] = obs
-        return df.observe(obs, F.count(F.lit(1)).alias("n"), *extra)
 
     def extract(self) -> tuple[DataFrame, DataFrame, DataFrame]:
         p = lambda f: os.path.join(self.input_dir, f)  # noqa: E731
@@ -262,16 +261,16 @@ class ReconciliationPipeline:
             fills = deterministic_dedup(
                 fills, ["our_trade_id"], [F.col(c) for c in fills.columns]
             )
-        flow = self._observe_count(trades, "raw")
+        flow = observe_count("raw", trades)
         if dq["filter_duplicates"]:
             flow = deterministic_dedup(
                 flow, ["trade_id"], [F.col(c) for c in TRADES_COLUMNS]
             )
-        flow = self._observe_count(flow, "post_dedup")
+        flow = observe_count("post_dedup", flow)
         if dq["filter_cancelled_trades"]:
             # 3-valued: NULL status is dropped too (reference parity).
             flow = flow.filter(F.col("trade_status") != "CANCELLED")
-        flow = self._observe_count(flow, "post_cancel")
+        flow = observe_count("post_cancel", flow)
 
         # Fills: size-aware (fact-shaped side — see _maybe_broadcast).
         # Symbols: a genuine dimension, always broadcast.
@@ -326,9 +325,10 @@ class ReconciliationPipeline:
         parallelism there (any split ≥ the floor still reads it as
         one partition), and the per-run conf set/restore churn was
         the confirmed etl_reference_pipeline regression (each SQL
-        conf write invalidates cached relation plans). run() also
-        skips the whole conf dance when the computed split equals the
-        session's current value.
+        conf write invalidates cached relation plans). run() holds
+        the split through ``session.conf_hold``, which writes nothing
+        when the session already holds that value and lets overlapping
+        runs on one session restore the value the first one found.
         """
         import glob
 
@@ -346,54 +346,49 @@ class ReconciliationPipeline:
 
     def run(self, output_dir: str = ".") -> dict[str, int]:
         split = self._adaptive_split_bytes()
-        prev_split: str | None = None
+        hold = contextlib.nullcontext()
         if split is not None:
-            cur = self.spark.conf.get("spark.sql.files.maxPartitionBytes")
-            if str(split) != cur:
-                prev_split = cur
-                self.spark.conf.set(
-                    "spark.sql.files.maxPartitionBytes", str(split)
-                )
-        trades, fills, symbols = self.extract()
-        validated = self.transform(trades, fills, symbols).cache()
-        try:
-            # Actions 1+2: the two sinks, side by side. The first to
-            # reach the cache materializes it and fires the stage
-            # Observations inside it; the split metrics are
-            # Observations on the sink projections themselves.
-            valid = self._observe_count(
-                self.cleaned_output(validated),
-                "valid",
-                F.sum(F.when(F.col("discrepancy_flag"), 1).otherwise(0)).alias("d"),
+            hold = conf_hold(
+                self.spark, "spark.sql.files.maxPartitionBytes", str(split)
             )
-            invalid = self._observe_count(self.exceptions_output(validated), "invalid")
-            out = self.config["output"]
-            single = bool(out.get("single_file", True))
-
-            def sink(df: DataFrame, key: str) -> None:
-                write_json(df, os.path.join(output_dir, out[key]), single_file=single)
-
-            # Both writes finish before the first error is re-raised
-            # and before the cache is dropped.
-            side_by_side(
-                lambda: sink(valid, "cleaned_trades_path"),
-                lambda: sink(invalid, "exceptions_report_path"),
-            )
-            obs = {k: o.get for k, o in self._observations.items()}
-            n = {k: v["n"] for k, v in obs.items()}
-            self.metrics = {
-                "processed_trades": n["raw"],
-                "duplicate_trades": n["raw"] - n["post_dedup"],
-                "cancelled_trades": n["post_dedup"] - n["post_cancel"],
-                "successful_trades": n["valid"],
-                "invalid_trades": n["invalid"],
-                # sum() over an empty sink is NULL
-                "discrepancy_trades": obs["valid"]["d"] or 0,
-            }
-            return self.metrics
-        finally:
-            validated.unpersist()
-            if prev_split is not None:
-                self.spark.conf.set(
-                    "spark.sql.files.maxPartitionBytes", prev_split
+        with hold, capture_counts() as counts:
+            trades, fills, symbols = self.extract()
+            validated = self.transform(trades, fills, symbols).cache()
+            try:
+                # Actions 1+2: the two sinks, side by side. The first to
+                # reach the cache materializes it and fires the stage
+                # Observations inside it; the split metrics are
+                # Observations on the sink projections themselves.
+                valid = observe_count(
+                    "valid",
+                    self.cleaned_output(validated),
+                    F.sum(F.when(F.col("discrepancy_flag"), 1).otherwise(0)).alias("d"),
                 )
+                invalid = observe_count("invalid", self.exceptions_output(validated))
+                out = self.config["output"]
+                single = bool(out.get("single_file", True))
+
+                def sink(df: DataFrame, key: str) -> None:
+                    path = os.path.join(output_dir, out[key])
+                    write_json(df, path, single_file=single)
+
+                # Both writes finish before the first error is re-raised
+                # and before the cache is dropped.
+                side_by_side(
+                    lambda: sink(valid, "cleaned_trades_path"),
+                    lambda: sink(invalid, "exceptions_report_path"),
+                )
+                obs = drain(counts)
+                n = {k: v["n"] for k, v in obs.items()}
+                self.metrics = {
+                    "processed_trades": n["raw"],
+                    "duplicate_trades": n["raw"] - n["post_dedup"],
+                    "cancelled_trades": n["post_dedup"] - n["post_cancel"],
+                    "successful_trades": n["valid"],
+                    "invalid_trades": n["invalid"],
+                    # sum() over an empty sink is NULL
+                    "discrepancy_trades": obs["valid"]["d"] or 0,
+                }
+                return self.metrics
+            finally:
+                validated.unpersist()

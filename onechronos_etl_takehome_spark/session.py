@@ -73,6 +73,7 @@ import shutil
 import subprocess
 import sys
 import tempfile
+import threading
 import time
 
 from pyspark.sql import SparkSession
@@ -337,3 +338,43 @@ def pin_semantics(spark: SparkSession) -> SparkSession:
     # raise unless pushdown is enabled (runtime-settable)
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     return spark
+
+
+_CONF_LOCK = threading.Lock()
+# (session uuid, conf key) → [depth, the value to restore when the last
+# holder leaves, or None when the first holder found the value held]
+_CONF_HOLDS: dict[tuple, list] = {}
+
+
+@contextlib.contextmanager
+def conf_hold(sess: SparkSession, key: str, value: str):
+    """Hold ``key=value`` on ``sess`` for the duration, reentrantly and
+    thread-safely: the session's first holder sets the value and
+    records the prior one, its last holder restores it. A holder that
+    arrives while another holds the key joins that hold: if it wants
+    another value it runs under the held one (for an input-split size
+    that changes partitioning only), and no holder can restore a value
+    over a hold still open. When the session already holds ``value``
+    the hold writes nothing and restores nothing: each SQL conf write
+    invalidates cached plans. Holds are keyed by session: sessions from
+    ``newSession()`` share the process but not their SQL confs, so one
+    session's hold must neither stand in for another's nor restore its
+    value into it."""
+    hkey = (sess._jsparkSession.sessionUUID(), key)
+    with _CONF_LOCK:
+        hold = _CONF_HOLDS.get(hkey)
+        if hold is None:
+            prior = sess.conf.get(key)
+            hold = _CONF_HOLDS[hkey] = [0, None if prior == value else prior]
+            if hold[1] is not None:
+                sess.conf.set(key, value)
+        hold[0] += 1
+    try:
+        yield
+    finally:
+        with _CONF_LOCK:
+            hold[0] -= 1
+            if hold[0] == 0:
+                del _CONF_HOLDS[hkey]
+                if hold[1] is not None:
+                    sess.conf.set(key, hold[1])

@@ -72,17 +72,17 @@ on the class, the claim-table shape implemented and race-tested).
 
 from __future__ import annotations
 
-import contextlib
 import functools
 import json
 import os
 import shutil
-import threading
 import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..session import conf_hold
 
 _LOG_DIR = "_txlog"
 
@@ -445,7 +445,7 @@ def _parquet_scan(reader, paths) -> DataFrame:
     exact files from the log (data, change and vector files), so one
     status call each is all the listing they need, and building the
     read starts no job however many files it names."""
-    with _conf_hold(
+    with conf_hold(
         reader._spark,
         "spark.sql.sources.parallelPartitionDiscovery.threshold",
         str(2**31 - 1),
@@ -1066,44 +1066,11 @@ def _parse_partition_dir(rel_dir: str, schema) -> dict:
     return out
 
 
-_CONF_LOCK = threading.Lock()
-# (session uuid, conf key) → [depth, the session's value before the
-# first hold]
-_CONF_HOLDS: dict[tuple, list] = {}
-
-
-@contextlib.contextmanager
-def _conf_hold(sess, key: str, value: str):
-    """Hold ``key=value`` on ``sess`` for the duration, reentrantly and
-    thread-safely: the session's first holder records its prior value,
-    its last one restores it — concurrent holders of one key on one
-    session all want the same value, so one depth-counted hold per
-    (session, key) is exact. Holds are keyed by session: sessions from
-    ``newSession()`` share the process but not their SQL confs, so one
-    session's hold must neither stand in for another's nor restore its
-    value into it."""
-    hkey = (sess._jsparkSession.sessionUUID(), key)
-    with _CONF_LOCK:
-        hold = _CONF_HOLDS.get(hkey)
-        if hold is None:
-            hold = _CONF_HOLDS[hkey] = [0, sess.conf.get(key)]
-            sess.conf.set(key, value)
-        hold[0] += 1
-    try:
-        yield
-    finally:
-        with _CONF_LOCK:
-            hold[0] -= 1
-            if hold[0] == 0:
-                del _CONF_HOLDS[hkey]
-                sess.conf.set(key, hold[1])
-
-
 def _ts_conf_micros(sess):
     """Write parquet timestamps as TIMESTAMP_MICROS while held:
     Spark's default INT96 carries no column statistics, so timestamp
     columns would never prune."""
-    return _conf_hold(
+    return conf_hold(
         sess, "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
     )
 

@@ -30,8 +30,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..observability import capture_counts, drain, observe_count
 
 _POINTER = "_LATEST"
 
@@ -139,11 +141,11 @@ def upsert(
             )
         next_version = version + 1
 
-    obs = Observation(f"upsert_v{next_version}")
-    merged = merged.observe(obs, F.count(F.lit(1)).alias("n"))
+    with capture_counts() as counts:
+        merged = observe_count("rows", merged)
     merged.write.mode("overwrite").parquet(os.path.join(path, f"v={next_version}"))
     _publish(path, next_version)
-    return {"version": next_version, "rows": int(obs.get["n"])}
+    return {"version": next_version, "rows": int(drain(counts)["rows"]["n"])}
 
 
 def vacuum(path: str, *, keep: int = 1) -> list[int]:

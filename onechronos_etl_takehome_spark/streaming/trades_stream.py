@@ -20,8 +20,8 @@ schema. Only the stateful/streaming-specific parts differ:
 - **Enrichment** joins are stream-static: fills/symbols load as batch
   frames (the dimension side of a production deployment); symbols is
   broadcast exactly like the batch pipeline.
-- **Metrics** come from the streaming progress/listener surface
-  (streaming/monitor.py), not Observations.
+- **Metrics** come from the query's progress reports
+  (``StreamingQuery.recentProgress``), not Observations.
 - **Sink** is the idempotent foreachBatch shape shared with
   events_stream.py: each microbatch lands as ``batch_id=<n>``
   directories for cleaned and exceptions in the same transaction-ish

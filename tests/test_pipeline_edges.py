@@ -200,3 +200,68 @@ def test_overlapped_sinks_under_fast_thread_switching(spark, tmp_path):
             assert _run(spark, inputs, out, single_file=False) == expected
     finally:
         sys.setswitchinterval(interval)
+
+
+def test_overlapping_runs_restore_the_split(spark, recon_inputs, tmp_path, monkeypatch):
+    """Two runs on one session with different input-split sizes,
+    interleaved A-starts, B-starts, A-ends, B-ends: the session's
+    ``maxPartitionBytes`` is back at its original value afterwards.
+    The split sizing measures every CSV in the input directory, so a
+    sparse pad file lifts each run above the 4 MB floor without
+    writing megabytes."""
+    import shutil
+    import threading
+
+    inputs, truth = recon_inputs
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key)
+    par = spark.sparkContext.defaultParallelism
+    dirs = {}
+    for name, per_core_mb in (("a", 6), ("b", 10)):
+        d = tmp_path / name
+        shutil.copytree(inputs, d)
+        with open(d / "pad.csv", "wb") as f:
+            f.truncate(per_core_mb * par << 20)
+        (tmp_path / f"out_{name}").mkdir()
+        dirs[name] = str(d)
+    splits = {
+        n: ReconciliationPipeline(spark, input_dir=d)._adaptive_split_bytes()
+        for n, d in dirs.items()
+    }
+    assert len({*splits.values(), None}) == 3
+
+    a_in, b_in, a_done = threading.Event(), threading.Event(), threading.Event()
+    extract = ReconciliationPipeline.extract
+
+    def interleaved(self):
+        if self.input_dir == dirs["a"]:
+            a_in.set()
+            assert b_in.wait(120)
+        else:
+            b_in.set()
+            assert a_done.wait(300)
+        return extract(self)
+
+    monkeypatch.setattr(ReconciliationPipeline, "extract", interleaved)
+
+    def run_a():
+        try:
+            return ReconciliationPipeline(spark, input_dir=dirs["a"]).run(
+                str(tmp_path / "out_a")
+            )
+        finally:
+            a_done.set()
+
+    def run_b():
+        assert a_in.wait(120)
+        return ReconciliationPipeline(spark, input_dir=dirs["b"]).run(
+            str(tmp_path / "out_b")
+        )
+
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(2) as pool:
+        fa, fb = pool.submit(run_a), pool.submit(run_b)
+        assert fa.result(timeout=600) == truth
+        assert fb.result(timeout=600) == truth
+    assert spark.conf.get(key) == before

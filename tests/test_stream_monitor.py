@@ -5,35 +5,25 @@ from onechronos_etl_takehome_spark.streaming import (
     hourly_event_windows_stream,
     read_events_stream,
 )
-from onechronos_etl_takehome_spark.streaming.monitor import (
-    attach_progress_listener,
-)
 
 SF = "/root/testdata/sf0.001"
 
 
-def test_progress_listener_counts_rows(spark, tmp_path):
+def test_progress_reports_count_rows(spark, tmp_path):
+    """The streaming instrument is the query's own progress reports:
+    every batch's input rows add up to the source's 1,000 events and
+    each report times its trigger."""
     pin_semantics(spark)
-    progress, listener = attach_progress_listener(spark)
-    try:
-        q = (
-            hourly_event_windows_stream(read_events_stream(spark, SF))
-            .writeStream.format("memory")
-            .queryName("monitored")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .start()
-        )
-        q.awaitTermination()
-        # listener events are delivered asynchronously
-        import time
-
-        for _ in range(20):
-            if progress.total_input_rows >= 1000:
-                break
-            time.sleep(0.5)
-        assert progress.total_input_rows == 1000
-        assert all("triggerExecution" in b["durationMs"] for b in progress.batches)
-    finally:
-        spark.streams.removeListener(listener)
+    q = (
+        hourly_event_windows_stream(read_events_stream(spark, SF))
+        .writeStream.format("memory")
+        .queryName("monitored")
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    q.awaitTermination()
+    batches = q.recentProgress
+    assert sum(b["numInputRows"] for b in batches) == 1000
+    assert batches and all("triggerExecution" in b["durationMs"] for b in batches)

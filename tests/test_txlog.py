@@ -13,6 +13,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from onechronos_etl_takehome_spark import session
 from onechronos_etl_takehome_spark.sources import constraints as C
 from onechronos_etl_takehome_spark.sources import txlog
 from onechronos_etl_takehome_spark.streaming.txlog_stream import (
@@ -1498,16 +1499,16 @@ class TestOverlappedWrites:
 
 class TestTimestampConfPerSession:
     def test_sessions_hold_and_restore_their_own_conf(self, spark, tmp_path):
-        import datetime
         import pyarrow.parquet as pq
 
         key = "spark.sql.parquet.outputTimestampType"
         a, b = spark.newSession(), spark.newSession()
         a.conf.set(key, "TIMESTAMP_MILLIS")
         b.conf.set(key, "INT96")
-        frame = b.createDataFrame(
-            [(1, datetime.datetime(2024, 1, 2, 3, 4, 5))], "k long, t timestamp"
-        )
+        # built by SQL, not createDataFrame: createDataFrame makes ``b``
+        # this thread's active session, where Spark later looks up
+        # Python data sources (format("txlog")) that ``spark`` registered
+        frame = b.sql("SELECT 1L AS k, TIMESTAMP'2024-01-02 03:04:05' AS t")
         with txlog._ts_conf_micros(a):
             staged = txlog._stage_data(frame, str(tmp_path))
             assert a.conf.get(key) == "TIMESTAMP_MICROS"
@@ -1549,7 +1550,7 @@ class TestTimestampConfPerSession:
             sys.setswitchinterval(prev)
         assert not any(t.is_alive() for t in threads)
         assert seen_outside_hold == []
-        assert txlog._CONF_HOLDS == {}
+        assert session._CONF_HOLDS == {}
         assert sessions[0].conf.get(key) == "INT96"
         assert sessions[1].conf.get(key) == "TIMESTAMP_MILLIS"
 
